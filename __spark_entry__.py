@@ -587,8 +587,8 @@ def paper_knowledge_edges(spark, sf_dir):
 
 def kg_chunks(spark, sf_dir):
     """The chunk table, with the slicing/assembly hash-verified (r5): the
-    chunker runs in provenance mode (chunk_documents with_spans=True, which
-    re-asserts in-UDF that the span slices equal the engine chunks), the
+    chunker runs in provenance mode (chunk_documents with_spans=True: the
+    engine's one packer, every chunk's text cut from its span), the
     extended table persists, and the DuckDB oracle independently RE-CUTS
     every chunk's text from its section sentence stream with substr and
     verifies the packing contract in SQL -- the chunks tile the stream in

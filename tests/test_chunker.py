@@ -6,28 +6,39 @@ blocks never sentence-split; reassembly == source (overlap=0).
 """
 
 import re
+import signal
+
+import pytest
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from textchunking_and_knowledgegraph_spark import job
 from textchunking_and_knowledgegraph_spark.operators.chunker import (
     HARD_MAX,
     MIN_LEN,
+    _chunk_row,
     chunk_documents,
     chunk_text,
-    pack_chunks,
+    pack_spans,
     parse_sections,
     protect_blocks,
     restore_blocks,
     split_sentences,
 )
-from textchunking_and_knowledgegraph_spark.sources.io import scan_source
+from textchunking_and_knowledgegraph_spark.operators.extract import doc_facts
+from textchunking_and_knowledgegraph_spark.sources.io import SOURCE_SCHEMA, scan_source
 from textchunking_and_knowledgegraph_spark.sources.synthetic import corpus_df
+
+
+def _pack(sentences, **kw):
+    stream, spans = pack_spans(sentences, **kw)
+    return [stream[a:a + n] for a, n in spans]
 
 
 def test_pack_length_policy():
     sents = ["x" * 50 + "."] * 40  # 40 sentences of 51 chars
-    chunks = pack_chunks(sents)
+    chunks = _pack(sents)
     assert all(len(c) <= HARD_MAX for c in chunks)
     assert all(len(c) >= MIN_LEN for c in chunks[:-1])
 
@@ -35,19 +46,19 @@ def test_pack_length_policy():
 def test_pack_small_absorb():
     # a small buffer followed by a medium sentence must be absorbed, not
     # emitted undersized (queue-absorb semantics)
-    chunks = pack_chunks(["a" * 100, "b" * 750])
+    chunks = _pack(["a" * 100, "b" * 750])
     assert len(chunks) == 1
     assert len(chunks[0]) == 851
 
 
 def test_pack_giant_sentence_hard_split():
-    chunks = pack_chunks(["g" * 5000])
+    chunks = _pack(["g" * 5000])
     assert all(len(c) <= HARD_MAX for c in chunks)
     assert sum(len(c) for c in chunks) == 5000
 
 
 def test_pack_overlap():
-    chunks = pack_chunks(["s" * 100 + "."] * 30, overlap=50)
+    chunks = _pack(["s" * 100 + "."] * 30, overlap=50)
     assert len(chunks) >= 2
     for a, b in zip(chunks, chunks[1:]):
         assert b.startswith(a[-50:])
@@ -56,7 +67,7 @@ def test_pack_overlap():
 @settings(max_examples=50, deadline=None)
 @given(st.lists(st.text(alphabet="abc词 ", min_size=1, max_size=300), max_size=40))
 def test_pack_policy_property(sents):
-    chunks = pack_chunks([s for s in sents if s.strip()])
+    chunks = _pack([s for s in sents if s.strip()])
     assert all(len(c) <= HARD_MAX for c in chunks)
     assert all(len(c) >= MIN_LEN for c in chunks[:-1])
 
@@ -131,3 +142,59 @@ def test_chunk_documents_spark(spark):
     # giant single line hard-split into <=1000 pieces covering all 12000 chars
     giant = pdf[pdf["path"] == "giant.txt"]
     assert giant["char_len"].sum() == 12000
+
+
+def test_overlap_out_of_range_fails_fast(spark):
+    """An overlap outside [0, MIN_LEN) is refused with a ValueError before
+    any packing or Spark job: at overlap >= TARGET_MAX a hard split would
+    advance by <= 0 chars and never end. The alarm bounds the test if the
+    guard is lost."""
+
+    def _hang(*_):
+        raise TimeoutError("packing did not terminate")
+
+    prev = signal.signal(signal.SIGALRM, _hang)
+    signal.alarm(10)
+    try:
+        src = spark.createDataFrame([], SOURCE_SCHEMA)
+        for bad in (-1, MIN_LEN, 799, 800, 5000):
+            with pytest.raises(ValueError, match="overlap"):
+                pack_spans(["x" * 1200], overlap=bad)
+            with pytest.raises(ValueError, match="overlap"):
+                chunk_text("x" * 1200, overlap=bad)
+            with pytest.raises(ValueError, match="overlap"):
+                chunk_documents(src, overlap=bad)
+            with pytest.raises(ValueError, match="overlap"):
+                doc_facts(src, overlap=bad)
+        # the CLI refuses it before starting a session
+        with pytest.raises(SystemExit) as exc:
+            job.main(["--source", "unused.parquet", "--overlap", "800"])
+        assert exc.value.code == 2
+        # the largest legal overlap still packs 1,200 chars into 2 chunks
+        chunks = chunk_text("x" * 1200, overlap=MIN_LEN - 1)
+        assert [len(c) for c in chunks] == [800, 999]
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, prev)
+
+
+def test_cpp_alias_chunks_as_code():
+    """Every language with a code extractor is chunked as code: "c++"
+    (extracted with the C/C++ extractor) must keep its indentation and
+    line structure exactly like "cpp"."""
+    body = "\n".join(
+        f"    int field_{i} = compute(value_{i}); total += field_{i};"
+        for i in range(40)
+    )
+    content = "#include <vector>\nint main() {\n" + body + "\n}\n"
+
+    def chunks(lang):
+        row = {"content": content, "lang": lang, "path": "src/main.cc"}
+        return [(span, stream[start:start + span["char_len"]])
+                for span, _, stream, start in _chunk_row(row, 0)]
+
+    cpp = chunks("cpp")
+    assert len(cpp) > 1
+    assert any(text.startswith("    int field_") for _, text in cpp)
+    assert chunks("c++") == cpp
+    assert chunks("C++") == cpp

@@ -234,8 +234,8 @@ def test_wav_roundtrip_property(samples, rate):
 
 
 # round-5 codecs/spans: PNG identity over every scanline filter and color
-# layout; pack_spans slice-equivalence with pack_chunks (the kg_chunks
-# oracle's foundation); dyadic SRP sign exactness (the ann_srp_topk
+# layout; pack_spans slice-equivalence with the pack_chunks oracle (the
+# kg_chunks oracle's foundation); dyadic SRP sign exactness (the ann_srp_topk
 # oracle's foundation)
 
 @_settings_codec(deadline=None, max_examples=40)
@@ -285,6 +285,55 @@ def test_png_rejects_unsupported_variants():
         decode_png(good[:30])  # truncated
 
 
+from textchunking_and_knowledgegraph_spark.operators.chunker import (  # noqa: E402
+    HARD_MAX,
+    MIN_LEN,
+    TARGET_MAX,
+)
+
+
+def pack_chunks(
+    sentences: list[str],
+    min_len: int = MIN_LEN,
+    target_max: int = TARGET_MAX,
+    hard_max: int = HARD_MAX,
+    overlap: int = 0,
+    joiner: str = " ",
+) -> list[str]:
+    """Oracle for ``pack_spans``: the engine's former string-building
+    packer, kept verbatim.
+
+    Greedy sentence packing under the frozen LumberChunker length policy.
+
+    Guarantees: every emitted chunk <= hard_max; every non-final chunk
+    >= min_len; target band [min_len, target_max] hit whenever sentence
+    granularity allows. SMALL buffers absorb following sentences past
+    target_max (up to hard_max) rather than emitting undersized chunks --
+    the reference's question-queue absorb semantics.
+    """
+    chunks: list[str] = []
+    buf = ""
+    for s in sentences:
+        if not s:
+            continue
+        sep = joiner if buf else ""
+        if len(buf) + len(sep) + len(s) <= target_max:
+            buf = buf + sep + s
+        elif len(buf) >= min_len:
+            chunks.append(buf)
+            tail = buf[-overlap:] if overlap > 0 else ""
+            buf = (tail + joiner + s) if tail else s
+        else:
+            buf = buf + sep + s  # SMALL absorb, may exceed target_max
+        while len(buf) > hard_max:  # LARGE: hard split at the target ceiling
+            chunks.append(buf[:target_max])
+            keep_from = target_max - overlap if overlap > 0 else target_max
+            buf = buf[keep_from:]
+    if buf.strip():
+        chunks.append(buf)
+    return chunks
+
+
 @_settings_codec(deadline=None, max_examples=80)
 @_given_codec(
     _st_codec.lists(
@@ -297,23 +346,25 @@ def test_png_rejects_unsupported_variants():
         ),
         min_size=0,
         max_size=30,
-    )
+    ),
+    # every legal overlap, with 0 (the contract's setting) drawn often
+    _st_codec.one_of(_st_codec.just(0), _st_codec.integers(0, MIN_LEN - 1)),
 )
-def test_pack_spans_matches_pack_chunks(sentences):
-    """The kg_chunks oracle's foundation: pack_spans' stream slices must
-    equal pack_chunks' output byte-for-byte for ANY sentence list, and the
-    spans must satisfy the coverage contract the oracle checks in SQL
-    (start at 0, gaps in {0,1} with the gap char == joiner, end == stream
-    end unless the final buffer was whitespace-only)."""
-    from textchunking_and_knowledgegraph_spark.operators.chunker import (
-        pack_chunks,
-        pack_spans,
-    )
+def test_pack_spans_matches_pack_chunks(sentences, overlap):
+    """pack_spans' stream slices must equal the pack_chunks oracle's output
+    byte-for-byte for ANY sentence list and any overlap in [0, MIN_LEN).
+    At overlap=0 -- the kg_chunks oracle's foundation -- the spans must
+    also satisfy the coverage contract the oracle checks in SQL (start at
+    0, gaps in {0,1} with the gap char == joiner, end == stream end unless
+    the final buffer was whitespace-only)."""
+    from textchunking_and_knowledgegraph_spark.operators.chunker import pack_spans
 
-    want = pack_chunks(sentences)
-    stream, spans = pack_spans(sentences)
+    want = pack_chunks(sentences, overlap=overlap)
+    stream, spans = pack_spans(sentences, overlap=overlap)
     got = [stream[a:a + n] for a, n in spans]
     assert got == want
+    if overlap:
+        return
     prev_end = None
     for a, n in spans:
         assert n >= 1

@@ -20,6 +20,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from .operators.chunker import check_overlap
 from .plans.pipeline import PipelineConfig, build_triples
 from .session import build_session
 from .sources.io import SOURCE_SCHEMA
@@ -148,6 +149,10 @@ def main(argv: list[str] | None = None) -> int:
                          "batch is missing. Stores built by this CLI are "
                          "self-contained (store_text=True): omit it.")
     args = ap.parse_args(argv)
+    try:
+        check_overlap(args.overlap)
+    except ValueError as e:
+        ap.error(f"--overlap: {e}")
 
     spark = build_session(app_name="tckg-job", master=args.master)
     dictionary = None

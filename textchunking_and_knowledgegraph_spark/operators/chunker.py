@@ -25,7 +25,8 @@ Reference semantics re-derived (NOT ported):
 
 The ``overlap`` parameter implements the north rule's "recursive fixed-overlap
 chunking" variant: when >0, each emitted chunk's last ``overlap`` characters
-are carried into the next chunk. Default 0 = reference parity (chunks
+are carried into the next chunk; it must lie in [0, MIN_LEN) (see
+``check_overlap``). Default 0 = reference parity (chunks
 partition the text exactly; reassembly == source), which the golden tests
 freeze. POLICY IS FROZEN -- any change must regenerate goldens in the same
 commit (SURVEY.md 7.4).
@@ -44,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..sources.io import CHUNK_SCHEMA
+from .extract import _CODE_EXTRACTORS
 
 # contract/verification twin of CHUNK_SCHEMA: + slicing provenance so the
 # kg_chunks oracle can re-cut chunk text from the section sentence stream
@@ -77,7 +79,9 @@ _IMAGE_RE = re.compile(r"!\[.*?\]\(.*?\)")
 
 _SENT_BOUNDARY_RE = re.compile(r"(?<=[。！？；])|(?<=[.!?;])\s+")
 
-_CODE_LANGS = {"python", "javascript", "java", "go", "c", "cpp", "rust", "typescript"}
+# languages chunked as code (physical lines, indentation kept) -- exactly
+# the languages that get a code extractor instead of SVO
+_CODE_LANGS = frozenset(_CODE_EXTRACTORS)
 
 
 # Private-use-area sentinels: cannot occur in real text, so the splitter
@@ -126,43 +130,13 @@ def split_sentences(text: str, code: bool = False) -> list[str]:
     return out
 
 
-def pack_chunks(
-    sentences: list[str],
-    min_len: int = MIN_LEN,
-    target_max: int = TARGET_MAX,
-    hard_max: int = HARD_MAX,
-    overlap: int = 0,
-    joiner: str = " ",
-) -> list[str]:
-    """Greedy sentence packing under the frozen LumberChunker length policy.
-
-    Guarantees: every emitted chunk <= hard_max; every non-final chunk
-    >= min_len; target band [min_len, target_max] hit whenever sentence
-    granularity allows. SMALL buffers absorb following sentences past
-    target_max (up to hard_max) rather than emitting undersized chunks --
-    the reference's question-queue absorb semantics.
-    """
-    chunks: list[str] = []
-    buf = ""
-    for s in sentences:
-        if not s:
-            continue
-        sep = joiner if buf else ""
-        if len(buf) + len(sep) + len(s) <= target_max:
-            buf = buf + sep + s
-        elif len(buf) >= min_len:
-            chunks.append(buf)
-            tail = buf[-overlap:] if overlap > 0 else ""
-            buf = (tail + joiner + s) if tail else s
-        else:
-            buf = buf + sep + s  # SMALL absorb, may exceed target_max
-        while len(buf) > hard_max:  # LARGE: hard split at the target ceiling
-            chunks.append(buf[:target_max])
-            keep_from = target_max - overlap if overlap > 0 else target_max
-            buf = buf[keep_from:]
-    if buf.strip():
-        chunks.append(buf)
-    return chunks
+def check_overlap(overlap: int) -> None:
+    """Reject an ``overlap`` outside [0, MIN_LEN): a hard split advances by
+    ``TARGET_MAX - overlap`` characters, so from ``TARGET_MAX`` on packing
+    never ends, and just below it each chunk advances a few characters
+    (overlap=799 turns 1,200 chars into 201 chunks)."""
+    if not 0 <= overlap < MIN_LEN:
+        raise ValueError(f"overlap must be in [0, {MIN_LEN}), got {overlap!r}")
 
 
 def pack_spans(
@@ -170,20 +144,29 @@ def pack_spans(
     min_len: int = MIN_LEN,
     target_max: int = TARGET_MAX,
     hard_max: int = HARD_MAX,
+    overlap: int = 0,
     joiner: str = " ",
 ) -> tuple[str, list[tuple[int, int]]]:
-    """Span-tracking twin of ``pack_chunks`` (overlap=0 only): returns the
-    joined sentence stream plus (start, len) spans such that
-    ``[stream[a:a+n] for a, n in spans] == pack_chunks(sentences)`` (pinned
-    by a hypothesis property test AND re-asserted inside the contract UDF).
+    """Greedy sentence packing under the frozen LumberChunker length policy.
 
-    The spans make the packing's OUTPUT relationship independently
-    checkable in plain SQL: every chunk is a contiguous slice of the
-    stream; consecutive chunks leave a gap of exactly one joiner char at a
-    soft boundary and zero at a hard split; the first chunk starts at 0 and
-    the last ends at the stream end -- the kg_chunks oracle re-cuts the
-    text with substr and verifies coverage + the [1,1000]/>=600 length
-    contract from these facts alone."""
+    Returns the joined sentence stream plus one (start, len) span per chunk;
+    every chunk is the slice ``stream[start:start+len]``. Guarantees: every
+    chunk <= hard_max; every non-final chunk >= min_len; target band
+    [min_len, target_max] hit whenever sentence granularity allows. SMALL
+    buffers absorb following sentences past target_max (up to hard_max)
+    rather than emitting undersized chunks -- the reference's question-queue
+    absorb semantics.
+
+    With ``overlap`` > 0 a chunk after a soft boundary starts with the last
+    ``min(overlap, len)`` characters of its predecessor plus the joiner; a
+    hard split advances by ``target_max - overlap``. At overlap=0 the spans
+    make the packing's OUTPUT relationship checkable in plain SQL: every
+    chunk is a contiguous slice of the stream; consecutive chunks leave a
+    gap of exactly one joiner char at a soft boundary and zero at a hard
+    split; the first chunk starts at 0 and the last ends at the stream end
+    -- the kg_chunks oracle re-cuts the text with substr and verifies
+    coverage + the [1,1000]/>=600 length contract from these facts alone."""
+    check_overlap(overlap)
     sents = [s for s in sentences if s]
     stream = joiner.join(sents)
     spans: list[tuple[int, int]] = []
@@ -199,39 +182,38 @@ def pack_spans(
             blen += len(joiner) + len(s)
         elif blen >= min_len:
             spans.append((pos, blen))
-            pos, blen = s_start, len(s)
+            # carry the buffer's tail: step back over the joiner and keep
+            # min(overlap, blen) characters before it
+            keep = min(overlap, blen)
+            pos = s_start - len(joiner) - keep if keep else s_start
+            blen = s_start + len(s) - pos
         else:
             blen += len(joiner) + len(s)  # SMALL absorb
         while blen > hard_max:  # LARGE: hard split at the target ceiling
             spans.append((pos, target_max))
-            pos += target_max
-            blen -= target_max
+            pos += target_max - overlap
+            blen -= target_max - overlap
     if blen and stream[pos : pos + blen].strip():
         spans.append((pos, blen))
     return stream, spans
 
 
-def chunk_text_spans(text: str, code: bool = False) -> tuple[str, list[tuple[int, int]]]:
-    """``chunk_text`` with provenance: (sentence stream, chunk spans).
-    Contract/verification path only -- the engine path stays chunk_text."""
+def _sentences(text: str, code: bool) -> list[str]:
+    """Protect atomic blocks -> split sentences -> restore per sentence.
+    Restoring before packing mirrors the reference (which rebuilds the
+    sentence queue with blocks inlined, `TextBook_LumberChunker.py:363-376`):
+    a protected block is never *sentence*-split, and packing sees true
+    lengths. Code is split into physical lines, unprotected."""
     if code:
-        return pack_spans(split_sentences(text, code=True))
+        return split_sentences(text, code=True)
     protected, saved = protect_blocks(text)
-    sents = [restore_blocks(s, saved) for s in split_sentences(protected)]
-    return pack_spans(sents)
+    return [restore_blocks(s, saved) for s in split_sentences(protected)]
 
 
 def chunk_text(text: str, code: bool = False, overlap: int = 0) -> list[str]:
-    """Protect atomic blocks -> split sentences -> restore per sentence ->
-    pack. Restoring before packing mirrors the reference (which rebuilds the
-    sentence queue with blocks inlined, `TextBook_LumberChunker.py:363-376`):
-    a protected block is never *sentence*-split, and packing sees true
-    lengths."""
-    if code:
-        return pack_chunks(split_sentences(text, code=True), overlap=overlap)
-    protected, saved = protect_blocks(text)
-    sents = [restore_blocks(s, saved) for s in split_sentences(protected)]
-    return pack_chunks(sents, overlap=overlap)
+    """Sentence-split and pack one section body; returns the chunk texts."""
+    stream, spans = pack_spans(_sentences(text, code), overlap=overlap)
+    return [stream[a : a + n] for a, n in spans]
 
 
 @dataclass
@@ -292,19 +274,15 @@ def parse_sections(text: str, fallback_title: str) -> list[_Section]:
     return sections
 
 
-def _chunk_row(row: dict, overlap: int, with_spans: bool = False) -> Iterator[dict]:
-    """One source row -> chunk rows. Pure function, runs inside mapInPandas.
-
-    ``with_spans=True`` (contract/verification path, overlap=0 only)
-    additionally emits (sec_ord, stream_start, sec_stream) provenance and
-    asserts in-UDF that the span slices reproduce the engine path's chunks
-    byte-for-byte -- so the split-lineage parquet can never drift from what
-    ``chunk_text`` actually emits."""
+def _chunk_row(row: dict, overlap: int) -> Iterator[tuple[dict, int, str, int]]:
+    """One source row -> one ``(span, sec_ord, sec_stream, stream_start)``
+    per emitted chunk. Pure function, runs inside mapInPandas. ``span``
+    holds the chunk's position fields (ord, section fields, char_start,
+    char_len); its text is ``sec_stream[stream_start:stream_start+char_len]``.
+    Each section is packed once."""
     content = row["content"] or ""
-    lang = (row["lang"] or "").lower()
-    code = lang in _CODE_LANGS
-    fallback = row["path"].rsplit("/", 1)[-1]
-    sections = parse_sections(content, fallback)
+    code = (row["lang"] or "").lower() in _CODE_LANGS
+    sections = parse_sections(content, row["path"].rsplit("/", 1)[-1])
     # F8: skip TOC books (root title 目录)
     if sections and sections[0].is_root and sections[0].title == _TOC_TITLE:
         return
@@ -314,40 +292,11 @@ def _chunk_row(row: dict, overlap: int, with_spans: bool = False) -> Iterator[di
         body = "\n".join(sec.lines)
         if not body.strip():
             continue
-        if with_spans:
-            stream, spans = chunk_text_spans(body, code=code)
-            pieces = [(stream[a : a + n], a) for a, n in spans]
-            engine = chunk_text(body, code=code, overlap=0)
-            if [p[0] for p in pieces] != engine:
-                raise AssertionError(
-                    f"pack_spans diverged from pack_chunks for doc "
-                    f"{row['doc_id']} section {sec_ord}"
-                )
-        else:
-            pieces = [(c, None) for c in chunk_text(body, code=code, overlap=overlap)]
-        emitted_in_sec = False
-        for chunk, stream_start in pieces:
-            if not chunk.strip():
+        stream, spans = pack_spans(_sentences(body, code), overlap=overlap)
+        for start, n in spans:
+            if not stream[start : start + n].strip():
                 continue  # F7 empty-chunk filter
-            extra = (
-                {"sec_ord": sec_ord, "stream_start": stream_start,
-                 # stream rides the first EMITTED chunk only (linear, not
-                 # per-row); F7 may drop a whitespace-only slice, so "first
-                 # emitted" rather than "first span"
-                 "sec_stream": None if emitted_in_sec else stream}
-                if with_spans
-                else {}
-            )
-            emitted_in_sec = True
-            yield {
-                **extra,
-                "repo": row["repo"],
-                "path": row["path"],
-                "commit": row["commit"],
-                "lang": row["lang"],
-                "sha": row["sha"],
-                "doc_id": row["doc_id"],
-                "chunk_id": f"{row['doc_id']}:{ord_}",
+            span = {
                 "ord": ord_,
                 "level": sec.level,
                 "parent_title": sec.parent_title,
@@ -355,10 +304,10 @@ def _chunk_row(row: dict, overlap: int, with_spans: bool = False) -> Iterator[di
                 "is_root": sec.is_root,
                 "section_kind": sec.kind,
                 "char_start": char_start,
-                "char_len": len(chunk),
-                "text": chunk,
+                "char_len": n,
             }
-            char_start += len(chunk)
+            yield span, sec_ord, stream, start
+            char_start += n
             ord_ += 1
 
 
@@ -375,21 +324,39 @@ def chunk_documents(
     (sec_ord, stream_start, sec_stream) provenance columns so an external
     SQL oracle can re-cut every chunk from its section's sentence stream
     and verify coverage + the length contract (see pack_spans)."""
+    check_overlap(overlap)
     if with_spans and overlap:
         raise ValueError("with_spans supports overlap=0 only (spans are "
                          "contiguous stream slices)")
-    cols = ["repo", "path", "commit", "lang", "sha", "doc_id", "content"]
+    prov = ["repo", "path", "commit", "lang", "sha", "doc_id"]
     schema = CHUNK_SPAN_SCHEMA if with_spans else CHUNK_SCHEMA
 
     def _map_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         field_names = [f.name for f in schema.fields]
         for pdf in batches:
             out: list[dict] = []
-            for row in pdf[cols].to_dict("records"):
-                out.extend(_chunk_row(row, overlap, with_spans=with_spans))
+            for row in pdf[prov + ["content"]].to_dict("records"):
+                prev_sec = None
+                for span, sec_ord, stream, start in _chunk_row(row, overlap):
+                    rec = {
+                        **span,
+                        **{k: row[k] for k in prov},
+                        "chunk_id": f"{row['doc_id']}:{span['ord']}",
+                        "text": stream[start : start + span["char_len"]],
+                    }
+                    if with_spans:
+                        # the stream rides the first EMITTED chunk of its
+                        # section only (linear, not per-row); F7 may drop a
+                        # whitespace-only slice, so "first emitted" rather
+                        # than "first span"
+                        rec["sec_ord"] = sec_ord
+                        rec["stream_start"] = start
+                        rec["sec_stream"] = None if sec_ord == prev_sec else stream
+                        prev_sec = sec_ord
+                    out.append(rec)
             yield pd.DataFrame(out, columns=field_names)
 
-    return source.select(*cols).mapInPandas(_map_batches, schema=schema)
+    return source.select(*prov, "content").mapInPandas(_map_batches, schema=schema)
 
 
 def chunk_length_stats(chunks: DataFrame) -> DataFrame:

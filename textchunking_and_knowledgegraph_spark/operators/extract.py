@@ -1,11 +1,13 @@
 """Triple emission: structural tree->triples + code-aware + SVO extractors.
 
-Three triple sources, unioned into the canonical edge shape
-(subj, pred, obj, subj_type, obj_type, repo, path, commit, sha, chunk_id):
+One fused pass: ``doc_facts`` ships each document's content into Python
+once (Arrow, mapInPandas) and returns its chunk spans and content triples;
+``triples_from_facts`` assembles the canonical edge shape
+(subj, pred, obj, subj_type, obj_type, repo, path, commit, sha, chunk_id)
+from them with JVM column algebra. Three triple kinds:
 
-G1  Structural triples from the chunk table -- pure column ops, the Spark
-    re-expression of the tree->table flatten at
-    `Parser/TextBook_LumberChunker.py:381-461`:
+G1  Structural triples from the chunk spans -- the Spark re-expression of
+    the tree->table flatten at `Parser/TextBook_LumberChunker.py:381-461`:
       root content:   (chapter  同位  chapter)  + (chapter  文本块  chunk)
       nested content: (parent   上位  section)  + (section  文本块  chunk)
     The 文本块 object is the chunk_id (the chunk table holds the text) --
@@ -14,14 +16,12 @@ G1  Structural triples from the chunk table -- pure column ops, the Spark
     Code/text files (no markdown headings) get (path contains_chunk chunk_id).
 
 G5  Code-aware extractors (north-star extension, `BASELINE.json:6`):
-    per-lang regex extraction of imports / defines / calls / inherits,
-    vectorized over Arrow batches of whole-file content.
+    per-lang regex extraction of imports / defines / calls / inherits
+    over whole-file content.
 
 G5b Rule-based SVO extraction for prose: closed verb vocabulary, capitalized
     subject heuristic -- deterministic replacement for the reference's
     per-row LLM knowledge extraction (`Parser/md_paper_parser.py:491-535`).
-
-All extraction is mapInPandas (Arrow) -- no per-row Python through Spark.
 """
 
 from __future__ import annotations
@@ -35,70 +35,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.io import TRIPLE_SCHEMA
 
 PRED_PEER = "同位"
 PRED_HYPERNYM = "上位"
 PRED_HYPONYM = "下位"
 PRED_TEXTBLOCK = "文本块"
 PRED_CONTAINS = "contains_chunk"
-
-
-# ---------------------------------------------------------------------------
-# G1: structural triples from the chunk table (no UDF -- pure column algebra)
-# ---------------------------------------------------------------------------
-
-def structural_triples(chunks: DataFrame) -> DataFrame:
-    """Chunk table -> hierarchy + text-block triples.
-
-    Two selects unioned; hierarchy edges deduped per document (the reference
-    emits one row per chunk with the hierarchy inline -- the set semantics of
-    the P/R metric make the dedup safe and it shrinks the edge table).
-    """
-    md = chunks.filter(F.col("level") > 0)
-    flat = chunks.filter(F.col("level") == 0)  # code/text: synthetic root
-
-    prov = [F.col("repo"), F.col("path"), F.col("commit"), F.col("sha")]
-
-    # (chapter 同位 chapter) for root sections / (parent 上位 section) nested
-    hier = (
-        md.select(
-            F.when(F.col("is_root"), F.col("section_title"))
-            .otherwise(F.col("parent_title"))
-            .alias("subj"),
-            F.when(F.col("is_root"), F.lit(PRED_PEER))
-            .otherwise(F.lit(PRED_HYPERNYM))
-            .alias("pred"),
-            F.col("section_title").alias("obj"),
-            F.lit("section").alias("subj_type"),
-            F.lit("section").alias("obj_type"),
-            *prov,
-            F.lit(None).cast("string").alias("chunk_id"),
-        )
-        .dropDuplicates(["subj", "pred", "obj", "sha"])
-    )
-
-    textblock = md.select(
-        F.col("section_title").alias("subj"),
-        F.lit(PRED_TEXTBLOCK).alias("pred"),
-        F.col("chunk_id").alias("obj"),
-        F.lit("section").alias("subj_type"),
-        F.lit("chunk").alias("obj_type"),
-        *prov,
-        F.col("chunk_id"),
-    )
-
-    contains = flat.select(
-        F.col("path").alias("subj"),
-        F.lit(PRED_CONTAINS).alias("pred"),
-        F.col("chunk_id").alias("obj"),
-        F.lit("file").alias("subj_type"),
-        F.lit("chunk").alias("obj_type"),
-        *prov,
-        F.col("chunk_id"),
-    )
-
-    return hier.unionByName(textblock).unionByName(contains)
 
 
 # ---------------------------------------------------------------------------
@@ -310,65 +252,15 @@ def _extract_svo(path: str, content: str) -> Iterator[tuple[str, str, str, str, 
         yield (subj, _SVO_VERBS[verb], obj, "entity", "entity")
 
 
-def content_triples(source: DataFrame) -> DataFrame:
-    """Whole-file extraction pass: code triples for code langs, SVO for
-    prose langs. Runs as one Arrow-batched mapInPandas over the source table
-    (parallel branch to the chunker; both are single-pass, shuffle-free)."""
-    cols = ["repo", "path", "commit", "lang", "sha", "content"]
-    field_names = [f.name for f in TRIPLE_SCHEMA.fields]
-
-    def _map_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for row in pdf[cols].to_dict("records"):
-                lang = (row["lang"] or "").lower()
-                content = row["content"] or ""
-                extractor = _CODE_EXTRACTORS.get(lang)
-                trips = (
-                    extractor(row["path"], content)
-                    if extractor
-                    else _extract_svo(row["path"], content)
-                )
-                for subj, pred, obj, st, ot in trips:
-                    out.append(
-                        {
-                            "subj": subj, "pred": pred, "obj": obj,
-                            "subj_type": st, "obj_type": ot,
-                            "repo": row["repo"], "path": row["path"],
-                            "commit": row["commit"], "sha": row["sha"],
-                            "chunk_id": None,
-                        }
-                    )
-            yield pd.DataFrame(out, columns=field_names)
-
-    return source.select(*cols).mapInPandas(_map_batches, schema=TRIPLE_SCHEMA)
-
-
-def extract_all_triples(source: DataFrame, chunks: DataFrame) -> DataFrame:
-    """Union of structural (G1) and content (G5) triples, deduplicated on the
-    canonical key. Dedup is a map-side-combinable aggregation (hash partial)."""
-    from .canonicalize import merge_dedup
-
-    out = structural_triples(chunks).unionByName(content_triples(source))
-    return merge_dedup(out, out.columns)
-
-
 # ---------------------------------------------------------------------------
-# Fused single-pass extraction (the 100 TB hot path)
+# Fused single-pass extraction (the hot path)
 #
-# build_triples' naive shape ships every document's content into Python TWICE
-# (chunker branch + content-extractor branch) and ships all chunk text back
-# through Arrow even though triple emission never reads it. The fused pass
-# sends content to Python exactly once and returns one compact row per doc:
-# chunk-span metadata + content triples as arrays. Everything downstream
-# (explode, union, dedup) is JVM column algebra. Measured: ~2x end-to-end on
-# the flagship pipeline, and the Arrow return shrinks from O(corpus bytes) to
-# O(#chunks * ~100 bytes) -- the property that matters when the input is
-# 100 TB and the UDF boundary is the bottleneck.
+# Content is sent to Python exactly once and each document comes back as one
+# compact row: chunk-span metadata + content triples as arrays. Chunk text
+# never crosses back (the Arrow return is O(#chunks * ~100 bytes), not
+# O(corpus bytes)); everything downstream (explode, dedup) is JVM column
+# algebra.
 # ---------------------------------------------------------------------------
-
-_SPAN_FIELDS = ["ord", "level", "parent_title", "section_title", "is_root",
-                "section_kind", "char_start", "char_len"]
 
 DOC_FACTS_SCHEMA = T.StructType(
     [
@@ -416,9 +308,11 @@ DOC_FACTS_SCHEMA = T.StructType(
 
 
 def doc_facts(source: DataFrame, overlap: int = 0) -> DataFrame:
-    """One fused Arrow pass per document: chunk spans + content triples."""
-    from .chunker import _chunk_row
+    """One fused Arrow pass per document: chunk spans + content triples
+    (code extractor for code langs, SVO for prose)."""
+    from .chunker import _chunk_row, check_overlap
 
+    check_overlap(overlap)
     cols = ["repo", "path", "commit", "lang", "sha", "doc_id", "content"]
     field_names = [f.name for f in DOC_FACTS_SCHEMA.fields]
 
@@ -426,20 +320,13 @@ def doc_facts(source: DataFrame, overlap: int = 0) -> DataFrame:
         for pdf in batches:
             out: list[dict] = []
             for row in pdf[cols].to_dict("records"):
-                spans = [
-                    {k: c[k] for k in _SPAN_FIELDS} for c in _chunk_row(row, overlap)
-                ]
+                spans = [span for span, *_ in _chunk_row(row, overlap)]
                 lang = (row["lang"] or "").lower()
                 content = row["content"] or ""
-                extractor = _CODE_EXTRACTORS.get(lang)
-                trip_iter = (
-                    extractor(row["path"], content)
-                    if extractor
-                    else _extract_svo(row["path"], content)
-                )
+                extractor = _CODE_EXTRACTORS.get(lang, _extract_svo)
                 trips = [
                     {"subj": s, "pred": p, "obj": o, "subj_type": st, "obj_type": ot}
-                    for s, p, o, st, ot in trip_iter
+                    for s, p, o, st, ot in extractor(row["path"], content)
                 ]
                 out.append(
                     {
@@ -455,17 +342,18 @@ def doc_facts(source: DataFrame, overlap: int = 0) -> DataFrame:
 
 
 def triples_from_facts(facts: DataFrame) -> DataFrame:
-    """JVM-side triple assembly over the fused facts table -- semantically
-    identical to ``extract_all_triples(source, chunk_documents(source))``
-    (asserted by tests/test_extract_fused.py).
+    """JVM-side triple assembly over the fused facts table: G1 hierarchy
+    and text-block triples from the spans, G5/G5b content triples from the
+    extractor output (outputs pinned by goldens in
+    tests/test_extract_fused.py).
 
     SINGLE-SCAN construction: a union of per-kind branches would re-execute
     the upstream mapInPandas once per branch (Catalyst does not dedupe common
     UDF subtrees without an exchange). Instead every document's triples are
     assembled as one array with higher-order functions (transform / filter /
     concat -- whole-stage codegen) and exploded once; the final deterministic
-    MERGE dedup on (subj, pred, obj, sha) also subsumes the per-doc
-    hierarchy dedup the chunk-table path does separately."""
+    MERGE dedup on (subj, pred, obj, sha) also collapses the hierarchy edge
+    every chunk of a section repeats."""
     null_triple = F.lit(None).cast(
         "struct<subj:string,pred:string,obj:string,"
         "subj_type:string,obj_type:string,chunk_id:string>"

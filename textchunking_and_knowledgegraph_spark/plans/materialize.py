@@ -7,11 +7,14 @@ north rule's operational requirements (`BASELINE.json:6,14`):
 
 - edges partitioned by ``repo_bucket`` (Iceberg ``bucket(repo)`` emulated as
   ``pmod(xxhash64(repo), NB)`` -- identical data layout, parquet locally).
-- **checkpoint-based resume**: each bucket commits independently; a manifest
-  JSON per bucket records (rows, docs, sha_count, t_ms). A killed run
-  restarts at the first un-committed bucket -- committed buckets are
-  skipped, and per-bucket writes are deterministic so the final output is
-  identical to an uninterrupted run.
+- **checkpoint-based resume**: every pending bucket is written by ONE Spark
+  write; once it succeeds, a manifest JSON per bucket records (rows, docs,
+  sha_count, t_ms) -- all committed together, sharing the write's t_ms.
+  A run killed during the edge write commits no manifest, so its re-run
+  rewrites every pending bucket; a run killed later (vertex write) is
+  re-run with every bucket skipped and only the vertices rebuilt. Bucket
+  contents are deterministic, so the final output is identical to an
+  uninterrupted run.
 - **MERGE semantics** (J10): dropDuplicates on the canonical key before
   write -- the distributed equivalent of Cypher MERGE's anti-join insert.
 - **lineage**: edges carry (repo, path, commit, sha); the manifest stores

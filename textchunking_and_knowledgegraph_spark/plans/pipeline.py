@@ -4,10 +4,10 @@
       -> scan (+sha256 invariant, +doc_id, lang filter pushed to files)
       -> normalize (column expressions, codegen)
       -> salted repartition (skew control; compute skew, not join skew)
-      -> chunk (mapInPandas, Arrow)                         [branch A]
-      -> structural triples (column algebra)
-      -> content triples (code/SVO extractors, mapInPandas) [branch B]
-      -> union + dedup
+      -> doc facts (mapInPandas, Arrow: one pass per document returns its
+         chunk spans + code/SVO content triples)
+      -> triple assembly (column algebra: structural + content triples)
+      -> MERGE dedup
       -> (optional) entity linking (MinHash-LSH) + canonicalization (CC)
       -> vertex/edge tables
 
@@ -26,12 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.normalize import normalize_markdown
 from ..operators.chunker import chunk_documents
-from ..operators.extract import (
-    doc_facts,
-    extract_all_triples,
-    structural_triples,
-    triples_from_facts,
-)
+from ..operators.extract import doc_facts, triples_from_facts
 from ..sources.io import estimate_input_splits, salted_repartition, scan_source
 
 
@@ -110,12 +105,9 @@ def build_chunks(
 def build_triples(spark: SparkSession, source, cfg: PipelineConfig | None = None) -> DataFrame:
     """The flagship query: source table -> canonical triple table.
 
-    Uses the fused single-pass extractor (``doc_facts``): content crosses the
-    Arrow boundary exactly once per document and only compact span/triple
-    arrays come back -- the unfused two-branch plan
-    (``extract_all_triples(src, chunk_documents(src))``) ships the corpus
-    into Python twice and all chunk text back, which is the bottleneck at
-    scale. Equivalence of the two plans is asserted in tests.
+    One extraction pass (``doc_facts``): content crosses the Arrow boundary
+    exactly once per document and only compact span/triple arrays come
+    back; ``triples_from_facts`` assembles the triples JVM-side.
     """
     cfg = cfg or PipelineConfig()
     src = prepared_source(spark, source, cfg)
@@ -175,5 +167,4 @@ __all__ = [
     "build_chunks",
     "build_triples",
     "build_vertices",
-    "structural_triples",
 ]

@@ -6,6 +6,9 @@ compares row count, sorted column names, and an order-insensitive value
 hash (columns sorted by name, rows sorted, values canonically stringified).
 
 Usage: python tools/check_contract.py [sf_dir] [query_name ...]
+
+An unknown query name is an error (exit 2) before anything runs;
+``checked`` in the summary line counts the entries that actually ran.
 """
 
 from __future__ import annotations
@@ -14,10 +17,11 @@ import datetime as dt
 import hashlib
 import json
 import math
+import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 TABLES = [
@@ -83,6 +87,12 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from textchunking_and_knowledgegraph_spark.session import build_session
 
+    qs = entry_mod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query name(s): {', '.join(unknown)}", file=sys.stderr)
+        return 2
+
     spark = build_session(app_name="contract-check")
     con = duckdb.connect()
     for t in TABLES:
@@ -90,12 +100,13 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
+    checked = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        checked += 1
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
@@ -142,7 +153,7 @@ def main() -> int:
                 )
                 print("    spark-only:", list(sp - op)[:3])
                 print("    oracle-only:", list(op - sp)[:3])
-    print(json.dumps({"failures": failures, "checked": len(qs)}))
+    print(json.dumps({"failures": failures, "checked": checked}))
     return 1 if failures else 0
 
 

@@ -3,10 +3,12 @@ appending a second batch to a persisted graph yields exactly the same edge
 and vertex sets as building everything in one shot, and touches only the
 buckets the new batch hashes into."""
 
+import hashlib
 import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from textchunking_and_knowledgegraph_spark.plans.add_content import add_content
@@ -147,54 +149,57 @@ def test_crash_window_vertex_recovery(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_add_content_migrates_legacy_vertex_layout(spark):
-    """A graph whose vertices/ predates the bucketed layout (flat parquet,
-    no v_bucket column) must still take increments: the first add_content
-    performs a one-time full migration to the bucketed layout instead of
-    crashing on the missing column, and the merged result equals one-shot.
-    Runs under a session-level partitionOverwriteMode=dynamic default — the
-    configuration under which an implicit (mode-inheriting) migration write
-    would leave the legacy flat files in place next to the new v_bucket=*
-    dirs; the migration must force static mode explicitly."""
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+def _file_digests(root):
+    """{relative path -> sha256} of every file under ``root``."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def test_add_content_refuses_legacy_layout(spark):
+    """A graph written before the recorded, bucketed layout -- no
+    _graph_meta.json, or a flat vertex table without v_bucket -- is refused
+    with a ValueError that names the graph and says to rebuild it, raised
+    before the edge rewrite so the edge files stay byte-for-byte as they
+    were."""
     src, _ = corpus_df(spark)
     half = F.pmod(F.xxhash64("path"), F.lit(2))
     first, second = src.filter(half == 0), src.filter(half == 1)
     base = tempfile.mkdtemp(prefix="tckg_addc_legacy_")
     out = os.path.join(base, "g")
-    full_out = os.path.join(base, "full")
     vdir = os.path.join(out, "vertices")
+    meta = os.path.join(out, "_graph_meta.json")
     try:
         materialize_graph(build_triples(spark, first), out, spark=spark)
-        # rewrite vertices/ the way the pre-bucketed version did: flat, no
-        # v_bucket partition column
+        edges_before = _file_digests(os.path.join(out, "edges"))
+
+        os.rename(meta, meta + ".bak")
+        with pytest.raises(ValueError, match="_graph_meta.json") as e:
+            add_content(spark, out, second)
+        assert out in str(e.value) and "materialize_graph" in str(e.value)
+        assert _file_digests(os.path.join(out, "edges")) == edges_before
+        os.rename(meta + ".bak", meta)
+
+        # vertices/ as the pre-bucketed version wrote it: flat, no v_bucket
         legacy = spark.read.parquet(vdir).drop("v_bucket").localCheckpoint(True)
         shutil.rmtree(vdir)
         legacy.write.parquet(vdir)
-        assert "v_bucket" not in spark.read.parquet(vdir).columns
-
-        add_content(spark, out, second)
-        materialize_graph(build_triples(spark, src), full_out, spark=spark)
-        assert _vertex_set(spark, out) == _vertex_set(spark, full_out)
-        # migrated on the way through: bucketed layout from now on, and the
-        # legacy flat root-level part files are GONE (a dynamic-mode
-        # migration write would have left them -> mixed-layout reads)
-        assert "v_bucket" in spark.read.parquet(vdir).columns
-        assert any(d.startswith("v_bucket=") for d in os.listdir(vdir))
-        assert not any(
-            d.startswith("part-") and d.endswith(".parquet")
-            for d in os.listdir(vdir)
-        )
+        with pytest.raises(ValueError, match="flat vertex table") as e:
+            add_content(spark, out, second)
+        assert out in str(e.value) and "materialize_graph" in str(e.value)
+        assert _file_digests(os.path.join(out, "edges")) == edges_before
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         shutil.rmtree(base, ignore_errors=True)
 
 
 def test_add_content_adopts_persisted_bucketing(spark):
-    """A graph written with n_buckets=8 updated by an add_content called
-    with a mismatched default must still MERGE correctly (bucketing is
-    read from the graph's metadata, not trusted from the caller)."""
+    """A graph written with n_buckets=8 is updated with 8 buckets, not the
+    materialize_graph default of 16: add_content takes its bucketing from
+    the graph's metadata."""
     src, _ = corpus_df(spark)
     half = F.pmod(F.xxhash64("path"), F.lit(2))
     base = tempfile.mkdtemp(prefix="tckg_addc_meta_")
@@ -203,7 +208,7 @@ def test_add_content_adopts_persisted_bucketing(spark):
     try:
         materialize_graph(build_triples(spark, src.filter(half == 0)), out,
                           spark=spark, n_buckets=8)
-        stats = add_content(spark, out, src.filter(half == 1), n_buckets=16)
+        stats = add_content(spark, out, src.filter(half == 1))
         assert stats["new_edges"] > 0
         assert max(stats["affected_buckets"]) < 8  # adopted the stored 8
         materialize_graph(build_triples(spark, src), full_out, spark=spark,

@@ -412,3 +412,20 @@ def test_incremental_embeddings_self_contained(spark):
         assert d["f1"] == ("e1", False)
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_publish_failure_leaves_no_staging_dir(spark, tmp_path):
+    """A batch whose write fails propagates the error and leaves no
+    .staging_<batch> directory behind in the store."""
+    import os
+
+    import pytest
+
+    from textchunking_and_knowledgegraph_spark.plans.incremental_dedup import _publish
+
+    bad = spark.range(4).select(
+        (F.col("id") + F.raise_error(F.lit("boom")).cast("long")).alias("x")
+    )
+    with pytest.raises(Exception, match="boom"):
+        _publish(bad, str(tmp_path), "sigs", "b1")
+    assert not [e for e in os.listdir(tmp_path / "sigs") if e.startswith(".staging_")]

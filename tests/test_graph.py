@@ -4,7 +4,6 @@ from textchunking_and_knowledgegraph_spark.operators.graph import (
     distinct_entity_count,
     label_propagation,
     lowest_common_ancestor,
-    merge_edges,
     merge_vertices,
     multi_hop,
     neighbors,
@@ -61,10 +60,6 @@ def test_merge_semantics(spark):
     )
     merged = merge_vertices(existing, incoming)
     assert merged.count() == 2
-
-    e1 = _edges_df(spark)
-    merged_e = merge_edges(e1, e1)
-    assert merged_e.count() == e1.count()
 
 
 def test_label_propagation(spark):

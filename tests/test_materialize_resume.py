@@ -1,6 +1,13 @@
-"""Checkpoint-based resume (north rule): a killed materialization restarts
-at the first un-committed bucket and the final output is identical to an
-uninterrupted run."""
+"""Checkpoint-based resume (north rule): materialize_graph skips the buckets
+whose manifests are committed, rewrites the rest, and ends with the output
+of an uninterrupted run.
+
+The resume test builds a partial checkpoint by hand (half the buckets'
+manifests and directories removed). No real crash produces that state:
+every bucket manifest is committed together after the single edge write,
+so the real crash windows are the two in the ``materialize.py`` docstring
+(a kill during the edge write redoes it; a kill after it rebuilds only the
+vertices)."""
 
 import json
 import os
@@ -32,8 +39,8 @@ def test_resume_after_partial_failure(spark):
         stats_full = materialize_graph(triples, full_out, checkpoint_dir=None, spark=spark)
         want = _edge_set(spark, full_out)
 
-        # run 1 with checkpointing -> then simulate a crash that lost the
-        # last half of the buckets (data AND manifests)
+        # run 1 with checkpointing -> then remove the last half of the
+        # buckets (data AND manifests) by hand
         stats1 = materialize_graph(triples, part_out, checkpoint_dir=ckpt, spark=spark)
         assert stats1["skipped_buckets"] == []
         done = sorted(committed_buckets(ckpt))
@@ -57,24 +64,35 @@ def test_resume_after_partial_failure(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def _vertex_set(spark, out_dir):
+    df = spark.read.parquet(os.path.join(out_dir, "vertices"))
+    return {tuple(r) for r in df.select("name", "type").collect()}
+
+
 def test_rerun_into_same_dir_drops_stale_buckets(spark):
-    """A re-materialize over a SHRUNK corpus must not leave stale edges in
-    buckets the new data no longer hashes into (dynamic-overwrite gap)."""
+    """A re-materialize over a SHRUNK corpus must not leave stale edges or
+    vertices in buckets the new data no longer hashes into: the result
+    equals a fresh build. The one-document case runs under a session-level
+    partitionOverwriteMode=dynamic default, which a write that does not set
+    its own mode would inherit and keep every old vertex bucket."""
     src, _ = corpus_df(spark)
     triples = build_triples(spark, src)
+    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     base = tempfile.mkdtemp(prefix="tckg_stale_")
-    out = os.path.join(base, "g")
     try:
-        materialize_graph(triples, out, spark=spark)
-        full = _edge_set(spark, out)
-
-        # shrink to one repo; its triples occupy fewer buckets
-        one_repo = triples.filter("repo = 'org/repo1'")
-        materialize_graph(one_repo, out, spark=spark)
-        got = _edge_set(spark, out)
-        want = {t for t in full} & {
-            tuple(r) for r in one_repo.select("subj", "pred", "obj", "sha").collect()
-        }
-        assert got == want  # nothing stale from the earlier, larger run
+        for i, (shrink, session_mode) in enumerate([
+            ("repo = 'org/repo1'", prev_mode),
+            ("path = 'svc/main_3.go'", "dynamic"),
+        ]):
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", session_mode)
+            out = os.path.join(base, f"g{i}")
+            fresh = os.path.join(base, f"fresh{i}")
+            materialize_graph(triples, out, spark=spark)
+            shrunk = triples.filter(shrink)
+            materialize_graph(shrunk, out, spark=spark)
+            materialize_graph(shrunk, fresh, spark=spark)
+            assert _edge_set(spark, out) == _edge_set(spark, fresh), shrink
+            assert _vertex_set(spark, out) == _vertex_set(spark, fresh), shrink
     finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         shutil.rmtree(base, ignore_errors=True)

@@ -245,12 +245,6 @@ def merge_vertices(existing: DataFrame, incoming: DataFrame) -> DataFrame:
     return existing.unionByName(new)
 
 
-def merge_edges(existing: DataFrame, incoming: DataFrame) -> DataFrame:
-    key = ["subj", "pred", "obj"]
-    new = incoming.dropDuplicates(key).join(existing, key, "left_anti")
-    return existing.unionByName(new)
-
-
 def label_propagation_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """A6/W3: one round of the community vote -- each node adopts its
     neighbors' most frequent label (freq desc, label asc tie-break), keeping

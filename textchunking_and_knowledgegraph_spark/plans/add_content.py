@@ -11,10 +11,16 @@ of rewriting the whole edge table, the plan
      table (MERGE semantics, J10 -- `StoreToNeo4j/Neo4j_functions.py:14-31`),
   3. rewrites those buckets with dynamic partition overwrite (Iceberg:
      ``overwritePartitions`` on ``bucket(repo)``; parquet emulation here),
-  4. merges the vertex table via the same anti-join primitive.
+  4. merges the vertex table the same way, per affected ``v_bucket``.
 
 Unaffected buckets are never read or written -- an append of one repo to a
 10^12-file table costs O(new data + affected buckets), not O(table).
+
+The layout (bucket columns, salted writes, manifests, ``_graph_meta.json``)
+is ``materialize.py``'s; this module only writes through it. A graph that
+predates it -- no ``_graph_meta.json``, or a flat vertex table without
+``v_bucket`` -- is refused with a ``ValueError`` before anything is written:
+rebuild it with ``materialize_graph``.
 """
 
 from __future__ import annotations
@@ -26,7 +32,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graph import merge_vertices
-from .materialize import EDGE_KEY, _commit
+from .materialize import (
+    EDGE_KEY,
+    commit_bucket_manifests,
+    read_graph_meta,
+    with_bucket,
+    write_buckets,
+)
 from .pipeline import build_triples, build_vertices
 
 
@@ -35,39 +47,28 @@ def add_content(
     output_dir: str,
     new_source: DataFrame,
     checkpoint_dir: str | None = None,
-    n_buckets: int = 16,
     cfg=None,
 ) -> dict:
     """Merge ``new_source`` documents into the graph persisted at
-    ``output_dir``. ``cfg`` is the same PipelineConfig the full build used
+    ``output_dir`` by ``materialize_graph``, adopting its bucketing.
+    ``cfg`` is the same PipelineConfig the full build used
     (linking/canonicalization parity). Returns
     {'new_edges': int, 'affected_buckets': [...]}.
     """
-    edge_dir = os.path.join(output_dir, "edges")
-    vdir = os.path.join(output_dir, "vertices")
     t0 = time.time()
-
-    # adopt the bucketing the graph was WRITTEN with: a mismatched
-    # n_buckets would hash repos into different partitions than their
-    # existing rows, break the anti-join, and write duplicates.
-    meta_path = os.path.join(output_dir, "_graph_meta.json")
-    files_per_bucket = 4
-    if os.path.exists(meta_path):
-        import json
-
-        with open(meta_path) as f:
-            meta = json.load(f)
-        n_buckets = int(meta["n_buckets"])
-        files_per_bucket = int(meta.get("files_per_bucket", files_per_bucket))
-
-    new_edges = (
-        build_triples(spark, new_source, cfg)
-        .dropDuplicates(EDGE_KEY)
-        .withColumn(
-            "repo_bucket", F.pmod(F.xxhash64("repo"), F.lit(n_buckets)).cast("int")
+    n_buckets, files_per_bucket = read_graph_meta(output_dir)
+    vertices_raw = spark.read.parquet(os.path.join(output_dir, "vertices"))
+    if "v_bucket" not in vertices_raw.columns:
+        raise ValueError(
+            f"{output_dir} has a flat vertex table (no v_bucket partitions, "
+            "written before the bucketed layout); rebuild it with "
+            "materialize_graph"
         )
-        .persist()
-    )
+
+    new_edges = with_bucket(
+        build_triples(spark, new_source, cfg).dropDuplicates(EDGE_KEY),
+        "edges", n_buckets,
+    ).persist()
     try:
         affected = sorted(
             r["repo_bucket"]
@@ -80,6 +81,7 @@ def add_content(
         # the dynamic-overwrite write below doesn't read the files it is
         # replacing (Iceberg snapshots make this copy unnecessary on a
         # cluster -- MERGE INTO commits a new snapshot).
+        edge_dir = os.path.join(output_dir, "edges")
         existing = (
             spark.read.parquet(edge_dir)
             .filter(F.col("repo_bucket").isin(affected))
@@ -87,112 +89,35 @@ def add_content(
         )
         incoming = new_edges.join(existing, EDGE_KEY, "left_anti")
         merged = existing.unionByName(incoming.select(*existing.columns))
-        # salt the write partitioning: repo_bucket alone = one multi-TB
-        # task per bucket at scale (same fix as materialize_graph);
-        # files_per_bucket adopted from _graph_meta.json above
-        salt = F.pmod(F.xxhash64("subj"), F.lit(files_per_bucket))
-        (
-            merged.repartition(
-                len(affected) * files_per_bucket, F.col("repo_bucket"), salt
-            )
-            .sortWithinPartitions("repo_bucket", "subj")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("repo_bucket")
-            .parquet(edge_dir)
-        )
+        write_buckets(merged, output_dir, "edges", len(affected),
+                      files_per_bucket, "dynamic")
 
-        # vertex MERGE (anti-join insert, existing vertices win) --
-        # bucket-incremental, the same pattern as the edge side. The
-        # round-2 implementation rewrote the ENTIRE vertex table per batch
-        # (O(all vertices) per micro-batch: billions of rows re-written per
-        # increment at the target scale); the table is now partitioned by
-        # pmod(xxhash64(name), n_buckets) (written that way by
-        # materialize_graph), so only the buckets the new batch's vertex
-        # names hash into are read, merged, and dynamic-partition-
-        # overwritten. Same-name rows always share a bucket, so the
-        # anti-join inside merge_vertices sees every possible match.
-        new_v = (
-            build_vertices(new_edges.drop("repo_bucket"))
-            .withColumn(
-                "v_bucket", F.pmod(F.xxhash64("name"), F.lit(n_buckets)).cast("int")
-            )
-            .localCheckpoint(eager=True)
-        )
+        # vertex MERGE (anti-join insert, existing vertices win), read and
+        # rewritten only in the buckets the new batch's vertex names hash
+        # into -- not O(all vertices) per micro-batch
+        new_v = with_bucket(
+            build_vertices(new_edges.drop("repo_bucket")), "vertices", n_buckets
+        ).localCheckpoint(eager=True)
         affected_v = sorted(
             r["v_bucket"] for r in new_v.select("v_bucket").distinct().collect()
         )
-        vertices_raw = spark.read.parquet(vdir)
-        legacy_vertices = "v_bucket" not in vertices_raw.columns
-        if legacy_vertices:
-            # graph materialized before the bucketed vertex layout existed:
-            # one-time full migration -- merge over the WHOLE legacy table
-            # and rewrite it bucketed (plain overwrite clears the old
-            # root-level files a dynamic overwrite would leave behind);
-            # every subsequent increment is bucket-incremental.
-            existing_v = vertices_raw.localCheckpoint(eager=True)
-            n_write_buckets = n_buckets
-        else:
-            existing_v = (
-                vertices_raw.filter(F.col("v_bucket").isin(affected_v))
-                .drop("v_bucket")
-                .localCheckpoint(eager=True)
-            )
-            n_write_buckets = max(1, len(affected_v))
-        merged_v = merge_vertices(
-            existing_v, new_v.drop("v_bucket")
-        ).withColumn(
-            "v_bucket", F.pmod(F.xxhash64("name"), F.lit(n_buckets)).cast("int")
+        existing_v = (
+            vertices_raw.filter(F.col("v_bucket").isin(affected_v))
+            .drop("v_bucket")
+            .localCheckpoint(eager=True)
         )
-        salt_v = F.pmod(F.xxhash64("name", "type"), F.lit(files_per_bucket))
-        vwriter = (
-            merged_v.repartition(
-                n_write_buckets * files_per_bucket, F.col("v_bucket"), salt_v
-            )
-            .sortWithinPartitions("v_bucket", "name")
-            .write.mode("overwrite")
+        merged_v = with_bucket(
+            merge_vertices(existing_v, new_v.drop("v_bucket")), "vertices", n_buckets
         )
-        # the mode is set EXPLICITLY on both branches: the migration relies
-        # on a static overwrite clearing the legacy flat root-level files,
-        # and a session-level spark.sql.sources.partitionOverwriteMode=
-        # dynamic default would otherwise silently leave them in place
-        # (mixed flat+partitioned layout -> conflicting-directory reads)
-        vwriter = vwriter.option(
-            "partitionOverwriteMode",
-            "static" if legacy_vertices else "dynamic",
-        )
-        vwriter.partitionBy("v_bucket").parquet(vdir)
+        write_buckets(merged_v, output_dir, "vertices", max(1, len(affected_v)),
+                      files_per_bucket, "dynamic")
 
         # recommit manifests for affected buckets (lineage/metrics stay true)
-        n_new = 0
         if checkpoint_dir:
-            stats = {
-                int(r["repo_bucket"]): r
-                for r in spark.read.parquet(edge_dir)
-                .filter(F.col("repo_bucket").isin(affected))
-                .groupBy("repo_bucket")
-                .agg(
-                    F.count("*").alias("rows"),
-                    F.countDistinct("sha").alias("sha_count"),
-                    F.countDistinct("path").alias("docs"),
-                )
-                .collect()
-            }
-            t_ms = int((time.time() - t0) * 1000)
-            for b in affected:
-                r = stats.get(b)
-                _commit(
-                    checkpoint_dir,
-                    f"bucket_{b}",
-                    {
-                        "bucket": b,
-                        "rows": int(r["rows"]) if r else 0,
-                        "sha_count": int(r["sha_count"]) if r else 0,
-                        "docs": int(r["docs"]) if r else 0,
-                        "t_ms": t_ms,
-                    },
-                )
-        n_new = incoming.count()
-        return {"new_edges": n_new, "affected_buckets": affected}
+            commit_bucket_manifests(
+                spark.read.parquet(edge_dir).filter(F.col("repo_bucket").isin(affected)),
+                affected, output_dir, checkpoint_dir, t0,
+            )
+        return {"new_edges": incoming.count(), "affected_buckets": affected}
     finally:
         new_edges.unpersist()

@@ -119,7 +119,11 @@ def _publish(df: DataFrame, store: str, table: str, batch_id: str) -> None:
     tdir = os.path.join(store, table)
     os.makedirs(tdir, exist_ok=True)
     staging = os.path.join(tdir, f".staging_{batch_id}")
-    df.write.mode("overwrite").parquet(staging)
+    try:
+        df.write.mode("overwrite").parquet(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)  # no partial staging dir
+        raise
     os.rename(staging, os.path.join(tdir, f"batch={batch_id}"))
 
 

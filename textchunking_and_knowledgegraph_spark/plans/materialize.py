@@ -3,10 +3,17 @@ lineage/metrics sink, checkpoint-based resume.
 
 Scale-out of the reference's persistence layer (`StoreToNeo4j/Neo4j_functions.py:14-31`
 per-row MERGE over bolt; `ES_Importer/es_importer.py:40-51` bulk import), with the
-north rule's operational requirements (`BASELINE.json:6,14`):
+north rule's operational requirements (`BASELINE.json:6,14`).
 
-- edges partitioned by ``repo_bucket`` (Iceberg ``bucket(repo)`` emulated as
-  ``pmod(xxhash64(repo), NB)`` -- identical data layout, parquet locally).
+This module owns the graph's on-disk layout; ``add_content`` writes through
+the same helpers:
+
+- ``edges/repo_bucket=<b>/`` with ``b = pmod(xxhash64(repo), n_buckets)``
+  (Iceberg ``bucket(repo)`` emulated -- identical data layout, parquet
+  locally) and ``vertices/v_bucket=<b>/`` with ``b = pmod(xxhash64(name),
+  n_buckets)``; ``_graph_meta.json`` records ``n_buckets`` and
+  ``files_per_bucket`` (``read_graph_meta``). A graph without it, or with a
+  flat vertex table, is refused by ``add_content``: rebuild it here.
 - **checkpoint-based resume**: every pending bucket is written by ONE Spark
   write; once it succeeds, a manifest JSON per bucket records (rows, docs,
   sha_count, t_ms) -- all committed together, sharing the write's t_ms.
@@ -25,12 +32,20 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 EDGE_KEY = ["subj", "pred", "obj", "sha"]
+_GRAPH_META = "_graph_meta"
+
+# table -> (bucket column, hashed key, salt columns, sort column)
+_LAYOUT = {
+    "edges": ("repo_bucket", "repo", ("subj",), "subj"),
+    "vertices": ("v_bucket", "name", ("name", "type"), "name"),
+}
 
 
 def _manifest_path(checkpoint_dir: str, name: str) -> str:
@@ -55,6 +70,106 @@ def _commit(checkpoint_dir: str, name: str, payload: dict) -> None:
     os.replace(tmp, _manifest_path(checkpoint_dir, name))  # atomic commit
 
 
+def read_graph_meta(output_dir: str) -> tuple[int, int]:
+    """``(n_buckets, files_per_bucket)`` the graph at ``output_dir`` was
+    written with. An increment must adopt them: a different n_buckets would
+    hash a repo into a different partition than its existing rows, miss
+    them in the anti-join, and write duplicates."""
+    path = _manifest_path(output_dir, _GRAPH_META)
+    if not os.path.exists(path):
+        raise ValueError(
+            f"{output_dir} has no {_GRAPH_META}.json (written before the "
+            "graph layout was recorded); rebuild it with materialize_graph"
+        )
+    with open(path) as f:
+        meta = json.load(f)
+    return int(meta["n_buckets"]), int(meta["files_per_bucket"])
+
+
+def with_bucket(df: DataFrame, table: str, n_buckets: int) -> DataFrame:
+    """Add ``table``'s bucket column: ``repo_bucket`` for edges, ``v_bucket``
+    for vertices. Same-key rows always share a bucket, so a per-bucket
+    anti-join sees every possible match."""
+    col, key = _LAYOUT[table][:2]
+    return df.withColumn(col, F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int"))
+
+
+def write_buckets(
+    df: DataFrame,
+    output_dir: str,
+    table: str,
+    n_write_buckets: int,
+    files_per_bucket: int,
+    overwrite: str,
+) -> None:
+    """Write ``df`` (carrying ``table``'s bucket column) under
+    ``output_dir/table``, partitioned by bucket. ``overwrite`` is the
+    partitionOverwriteMode, always set here so a session default cannot
+    change what is replaced: ``"static"`` replaces the whole table,
+    ``"dynamic"`` only the buckets present in ``df``.
+
+    Partitioning key = (bucket, salt): repartitioning on the bucket ALONE
+    would make each bucket a single task/file -- a multi-TB task at 100 TB
+    scale. The salt gives files_per_bucket parallel writers per bucket
+    directory (size it so files land ~512 MB at the target scale);
+    sortWithinPartitions keeps a deterministic key-ordered layout for
+    point-join locality (SURVEY.md 4.3). On a real cluster this is Iceberg
+    overwritePartitions on bucket(key)."""
+    col, _, salt_cols, sort_col = _LAYOUT[table]
+    salt = F.pmod(F.xxhash64(*salt_cols), F.lit(files_per_bucket))
+    (
+        df.repartition(n_write_buckets * files_per_bucket, F.col(col), salt)
+        .sortWithinPartitions(col, sort_col)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", overwrite)
+        .partitionBy(col)
+        .parquet(os.path.join(output_dir, table))
+    )
+
+
+def commit_bucket_manifests(
+    edges: DataFrame,
+    buckets: list[int],
+    output_dir: str,
+    checkpoint_dir: str | None,
+    t0: float,
+) -> int:
+    """Commit ``bucket_<b>.json`` (rows, sha_count, docs, t_ms) for every
+    bucket in ``buckets`` from ONE grouped aggregation over ``edges`` (n
+    buckets rows collected -- manifest stats, not hot path); t_ms is the
+    time since ``t0``, shared by all. Returns the buckets' total rows.
+
+    A dynamic overwrite only replaces the buckets present in the write, so
+    a bucket that has no rows now but held data from an earlier run into
+    the same ``output_dir`` would keep its stale files: its directory is
+    removed BEFORE its manifest commits (a resumed run skips committed
+    buckets)."""
+    stats = {
+        int(r["repo_bucket"]): r
+        for r in edges.groupBy("repo_bucket")
+        .agg(
+            F.count("*").alias("rows"),
+            F.countDistinct("sha").alias("sha_count"),
+            F.countDistinct("path").alias("docs"),
+        )
+        .collect()
+    }
+    t_ms = int((time.time() - t0) * 1000)
+    total = 0
+    for b in buckets:
+        r = stats.get(b)
+        if r is None:
+            shutil.rmtree(
+                os.path.join(output_dir, "edges", f"repo_bucket={b}"),
+                ignore_errors=True,
+            )
+        counts = {k: int(r[k]) if r else 0 for k in ("rows", "sha_count", "docs")}
+        total += counts["rows"]
+        if checkpoint_dir:
+            _commit(checkpoint_dir, f"bucket_{b}", {"bucket": b, **counts, "t_ms": t_ms})
+    return total
+
+
 def materialize_graph(
     triples: DataFrame,
     output_dir: str,
@@ -71,19 +186,11 @@ def materialize_graph(
     snapshots; the manifest emulation keeps identical semantics without the
     runtime jar (SURVEY.md 7.0).
     """
-    # persist the layout parameters: an incremental update with a DIFFERENT
-    # n_buckets would hash the same repo into a different partition, miss
-    # existing rows in its anti-join, and write duplicates. add_content
-    # reads this and adopts the stored bucketing.
-    os.makedirs(output_dir, exist_ok=True)
-    with open(os.path.join(output_dir, "_graph_meta.json"), "w") as f:
-        json.dump({"n_buckets": n_buckets, "files_per_bucket": files_per_bucket}, f)
+    # add_content adopts the bucketing recorded here (read_graph_meta)
+    _commit(output_dir, _GRAPH_META,
+            {"n_buckets": n_buckets, "files_per_bucket": files_per_bucket})
 
-    edges = (
-        triples.dropDuplicates(EDGE_KEY)
-        .withColumn("repo_bucket", F.pmod(F.xxhash64("repo"), F.lit(n_buckets)).cast("int"))
-        .persist()
-    )
+    edges = with_bucket(triples.dropDuplicates(EDGE_KEY), "edges", n_buckets).persist()
     try:
         done = committed_buckets(checkpoint_dir)
         skipped = sorted(done)
@@ -91,75 +198,22 @@ def materialize_graph(
             json.load(open(_manifest_path(checkpoint_dir, f"bucket_{b}")))["rows"]
             for b in skipped
         )
-        edge_dir = os.path.join(output_dir, "edges")
         t0 = time.time()
 
         pending = edges
         if done:
             # resume: committed buckets are filtered out BEFORE the write --
             # dynamic partition overwrite touches only pending directories
-            pending = edges.filter(~F.col("repo_bucket").isin(sorted(done)))
+            pending = edges.filter(~F.col("repo_bucket").isin(skipped))
 
         # ONE write for every pending bucket: O(1) Spark jobs regardless of
-        # n_buckets (the round-1 per-bucket loop issued n_buckets sequential
-        # full passes). Partitioning key = (repo_bucket, subj-hash salt):
-        # repartitioning on repo_bucket ALONE would make each bucket a
-        # single task/file -- a multi-TB task at 100 TB scale. The salt
-        # gives files_per_bucket parallel writers per bucket directory
-        # (size files_per_bucket so files land ~512 MB at the target
-        # scale); sortWithinPartitions keeps the deterministic subj-ordered
-        # layout for downstream point-join locality (SURVEY.md 4.3). On a
-        # real cluster this is Iceberg overwritePartitions on bucket(repo).
-        salt = F.pmod(F.xxhash64("subj"), F.lit(files_per_bucket))
-        (
-            pending.repartition(
-                n_buckets * files_per_bucket, F.col("repo_bucket"), salt
-            )
-            .sortWithinPartitions("repo_bucket", "subj")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("repo_bucket")
-            .parquet(edge_dir)
+        # n_buckets
+        write_buckets(pending, output_dir, "edges", n_buckets, files_per_bucket,
+                      "dynamic")
+        total_rows += commit_bucket_manifests(
+            pending, [b for b in range(n_buckets) if b not in done],
+            output_dir, checkpoint_dir, t0,
         )
-        # per-bucket stats from ONE grouped aggregation over the same cache
-        stats = {
-            int(r["repo_bucket"]): r
-            for r in pending.groupBy("repo_bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.countDistinct("sha").alias("sha_count"),
-                F.countDistinct("path").alias("docs"),
-            )
-            .collect()  # n_buckets rows -- manifest stats, not hot path
-        }
-        write_ms = int((time.time() - t0) * 1000)
-        # dynamic overwrite only touches partitions PRESENT in `pending`:
-        # a pending bucket that has zero rows this run but holds data from
-        # a previous run into the same output_dir would silently keep its
-        # stale files (the round-1 per-bucket loop overwrote every
-        # directory unconditionally). Restore that guarantee driver-side:
-        # O(n_buckets) directory removals, no extra Spark jobs.
-        import shutil
-
-        for b in range(n_buckets):
-            if b not in done and stats.get(b) is None:
-                shutil.rmtree(
-                    os.path.join(edge_dir, f"repo_bucket={b}"), ignore_errors=True
-                )
-        for b in range(n_buckets):
-            if b in done:
-                continue
-            r = stats.get(b)
-            payload = {
-                "bucket": b,
-                "rows": int(r["rows"]) if r else 0,
-                "sha_count": int(r["sha_count"]) if r else 0,
-                "docs": int(r["docs"]) if r else 0,
-                "t_ms": write_ms,  # shared single-pass write time
-            }
-            total_rows += payload["rows"]
-            if checkpoint_dir:
-                _commit(checkpoint_dir, f"bucket_{b}", payload)
 
         from .pipeline import build_vertices
 
@@ -172,27 +226,12 @@ def materialize_graph(
         # the union of all committed buckets, and the scan is column-pruned
         # to the endpoint/type columns.
         ss = spark or triples.sparkSession
-        persisted = ss.read.parquet(edge_dir).drop("repo_bucket")
-        vdir = os.path.join(output_dir, "vertices")
-        # name-hash bucketed layout (same n_buckets as edges, recorded in
-        # _graph_meta.json): add_content merges vertices per affected
-        # bucket with dynamic partition overwrite instead of rewriting the
-        # whole table per increment. Salted like the edge write so a
-        # bucket is never a single task/file.
-        bucketed_v = build_vertices(persisted).withColumn(
-            "v_bucket", F.pmod(F.xxhash64("name"), F.lit(n_buckets)).cast("int")
-        )
-        salt_v = F.pmod(F.xxhash64("name", "type"), F.lit(files_per_bucket))
-        (
-            bucketed_v.repartition(
-                n_buckets * files_per_bucket, F.col("v_bucket"), salt_v
-            )
-            .sortWithinPartitions("v_bucket", "name")
-            .write.mode("overwrite")
-            .partitionBy("v_bucket")
-            .parquet(vdir)
-        )
-        n_vertices = ss.read.parquet(vdir).count()
+        persisted = ss.read.parquet(os.path.join(output_dir, "edges")).drop("repo_bucket")
+        # name-hash bucketed (same n_buckets as edges) so add_content merges
+        # vertices per affected bucket; static: the whole table is replaced
+        write_buckets(with_bucket(build_vertices(persisted), "vertices", n_buckets),
+                      output_dir, "vertices", n_buckets, files_per_bucket, "static")
+        n_vertices = ss.read.parquet(os.path.join(output_dir, "vertices")).count()
         if checkpoint_dir:
             _commit(checkpoint_dir, "vertices", {"rows": n_vertices})
         return {"edges": total_rows, "vertices": n_vertices, "skipped_buckets": skipped}

@@ -12,10 +12,11 @@ Exit 1 if any expectation fails (greppable FAIL lines).
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CHECKS = [
     # (query, [(must_contain, why)], [(must_not_contain, why)])

@@ -1857,7 +1857,7 @@ def _pagerank_oracle_sql(iters: int = 8, damping: float = 0.85) -> str:
 
 def _simhash_fingerprint_sql() -> str:
     """Shared CTE chain (words → fp) recomputing operators/dedup.py
-    ``_simhash64`` fingerprints in DuckDB: ASCII case-fold + ASCII-ws split
+    ``_simhash_batch`` fingerprints in DuckDB: ASCII case-fold + ASCII-ws split
     (the three-engine-parity tokenizer, see dedup.py ``_ASCII_LOWER_TAB``),
     bit i of the md5-based word hash read from hex nibble 16 - i//4 at
     in-nibble position i%4, sign votes summed with occurrence multiplicity,
@@ -1917,7 +1917,7 @@ def _minhash_oracle_sql(
     verify metric (dedup_ngram covers that):
 
     * gram hash: first 8 md5 bytes >> 3, recomputed from hex nibbles
-      (``linking._gram_hash``'s engine-portable basis);
+      (``linking._block_minhash``'s engine-portable basis);
     * permutations: the seeded ``_perm_params`` (a, b) constants inlined as
       a VALUES CTE — deterministic parameters of the operator, exactly like
       the walk oracle inlines its seed;

@@ -1,9 +1,10 @@
 """Dedup suite tests: planted duplicates must be found; disjoint docs must not."""
 
 from pyspark.sql import functions as F
+from signature_oracles import simhash64
 
 from textchunking_and_knowledgegraph_spark.operators.dedup import (
-    _simhash64,
+    _simhash_batch,
     embedding_near_dups,
     exact_dedup,
     minhash_near_dups,
@@ -156,20 +157,21 @@ def test_minhash_collapse_path_output(spark):
 
 
 def test_simhash_known_values():
-    a = _simhash64(_BASE)
-    b = _simhash64(_BASE)
-    assert a == b
-    c = _simhash64(_BASE.replace("quick", "swift"))
+    a, b, c = _simhash_batch(
+        [_BASE, _BASE, _BASE.replace("quick", "swift")]
+    ).tolist()
+    assert a == b == simhash64(_BASE)
     assert bin((a ^ c) & ((1 << 64) - 1)).count("1") <= 12  # near in hamming space
 
 
 def test_simhash_duckdb_fingerprint_parity():
     """The dedup_simhash oracle rebuilds the 64-bit fingerprint from
     md5(word) hex nibbles — bit i lives in nibble 16 - i//4 at in-nibble
-    position i%4. Pin that bit-layout equivalence against `_simhash64`
-    directly, running the SAME `_simhash_fingerprint_sql()` the shipped
-    oracle uses (so the test cannot drift from it), on inputs the driver
-    corpus never exercises: CJK words, U+3000 inside a token, repeated
+    position i%4. Pin that bit-layout equivalence against both the shipped
+    batch kernel `_simhash_batch` and the per-doc oracle `simhash64`,
+    running the SAME `_simhash_fingerprint_sql()` the shipped oracle uses
+    (so the test cannot drift from it), on inputs the contract corpus never
+    exercises: CJK words, U+3000 inside a token, repeated
     words voting with multiplicity, the empty-text sentinel -2^63, and the
     unicode case-mapping traps (final-position Σ, dotted İ) that full
     lower() resolves differently per engine — the ASCII-only case-fold
@@ -195,8 +197,9 @@ def test_simhash_duckdb_fingerprint_parity():
         + " SELECT id, simhash FROM fp ORDER BY id"
     )
     got = dict(con.execute(sql).fetchall())
+    shipped = _simhash_batch(texts).tolist()
     for i, t in enumerate(texts):
-        assert got[i] == _simhash64(t), (i, t)
+        assert got[i] == shipped[i] == simhash64(t), (i, t)
 
 
 def test_simhash_near_dups(spark):
@@ -268,3 +271,42 @@ def test_dedup_decisions_from_pairs(spark):
     assert out[5] == (5, True) and out[6] == (5, False)
     keepers = {v[0] for v in out.values()}
     assert keepers == {1, 4, 5}
+
+
+def test_minhash_kernel_memory_is_bounded():
+    """The signature kernel's working set is one block of shingles, not the
+    batch: 4x the docs in one batch may not take 1.5x the peak. tracemalloc
+    sees numpy's buffers as well as Python objects. The docs are 150-450
+    high-entropy words, so nearly every shingle is distinct -- the case
+    where a batch-wide shingle table grows with the batch."""
+    import random
+    import tracemalloc
+
+    from textchunking_and_knowledgegraph_spark.operators.dedup import _word_shingles
+    from textchunking_and_knowledgegraph_spark.operators.linking import (
+        _batch_signatures_from_sets,
+        _perm_params,
+    )
+
+    rng = random.Random(11)
+    a, b = _perm_params(64)
+    peaks = {}
+    for n in (1000, 4000):
+        sets = [
+            _word_shingles(
+                " ".join(
+                    f"{rng.getrandbits(48):012x}"
+                    for _ in range(rng.randint(150, 450))
+                )
+            )
+            for _ in range(n)
+        ]
+        tracemalloc.start()
+        try:
+            sigs = _batch_signatures_from_sets(sets, a, b)
+            peaks[n] = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert len(sigs) == n
+    assert peaks[4000] <= 1.5 * peaks[1000], peaks
+    assert peaks[4000] < 32 << 20, peaks

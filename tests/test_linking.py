@@ -1,12 +1,14 @@
 """Entity-linking tests: known alias pairs must link, disjoint strings must
 not; determinism of signatures; top-1 tie-break (SURVEY.md 5.3)."""
 
+import pandas as pd
 from pyspark.sql import functions as F
+from signature_oracles import minhash_signature
 
 from textchunking_and_knowledgegraph_spark.operators.linking import (
+    _batch_signatures,
     _char_ngrams,
     _perm_params,
-    _signature,
     hierarchy_triples,
     link_entities,
 )
@@ -15,18 +17,22 @@ from textchunking_and_knowledgegraph_spark.sources.synthetic import (
 )
 
 
+def _signatures(texts, a, b):
+    return [row.tolist() for row in _batch_signatures(pd.Series(texts), a, b)]
+
+
 def test_signature_deterministic():
     a, b = _perm_params(64)
-    s1 = _signature("函数的概念", a, b)
-    s2 = _signature("函数的概念", a, b)
+    s1, s2 = _signatures(["函数的概念", "函数的概念"], a, b)
     assert s1 == s2 and len(s1) == 64
+    assert _signatures(["函数的概念"], a, b) == [s1]
 
 
 def test_signature_similarity_monotone():
     a, b = _perm_params(128)
-    s_base = _signature("函数的概念与性质", a, b)
-    s_near = _signature("函数的概念与表示", a, b)
-    s_far = _signature("随机抽样方法", a, b)
+    s_base, s_near, s_far = _signatures(
+        ["函数的概念与性质", "函数的概念与表示", "随机抽样方法"], a, b
+    )
     near = sum(x == y for x, y in zip(s_base, s_near))
     far = sum(x == y for x, y in zip(s_base, s_far))
     assert near > far
@@ -139,21 +145,12 @@ def test_link_entities_tfidf_scorer(spark):
 
 
 def test_batch_signatures_equal_per_doc():
-    """The batch-vectorized minhash must be bit-identical to the per-doc
-    reference implementation (determinism contract)."""
-    import pandas as pd
-
-    from textchunking_and_knowledgegraph_spark.operators.linking import (
-        _batch_signatures,
-        _perm_params,
-        _signature,
-    )
-
+    """The shipped block-wise minhash kernel must be bit-identical to the
+    per-doc reference (determinism contract), blanks and repeats included."""
     a, b = _perm_params(64)
-    texts = pd.Series(["函数的概念", "函数概念", "", "abc", "spark sql engine", "abc"])
-    per_doc = [_signature(t, a, b) for t in texts]
-    batch = list(_batch_signatures(texts, a, b))
-    assert per_doc == batch
+    texts = ["函数的概念", "函数概念", "", "abc", "spark sql engine", "abc", None]
+    per_doc = [minhash_signature(_char_ngrams(t), a, b) for t in texts]
+    assert _signatures(texts, a, b) == per_doc
 
 
 def test_link_entities_join_regimes(spark):

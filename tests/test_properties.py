@@ -10,7 +10,7 @@ import sys
 
 import pytest
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -51,12 +51,61 @@ def test_tfidf_cosine_bounds_and_symmetry(a, b):
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.text(alphabet=_ALPHABET, min_size=0, max_size=50), max_size=20))
 def test_simhash_deterministic_and_range(words_list):
-    from textchunking_and_knowledgegraph_spark.operators.dedup import _simhash64
+    from signature_oracles import simhash64
+
+    from textchunking_and_knowledgegraph_spark.operators.dedup import _simhash_batch
 
     text = " ".join(words_list)
-    a, b = _simhash64(text), _simhash64(text)
-    assert a == b
+    a, b = _simhash_batch([text, text]).tolist()
+    assert a == b == simhash64(text)
     assert -(1 << 63) <= a < (1 << 63)
+
+
+def test_blocks_respect_the_budget():
+    from unittest import mock
+
+    from textchunking_and_knowledgegraph_spark.operators import linking
+
+    sets = [{1, 2, 3}, set(), {1, 2, 3, 4, 5}, {6}, {7}]
+    with mock.patch.object(linking, "_BLOCK_ITEMS", 4):
+        got = list(linking._blocks(iter(sets)))
+    # a set larger than the budget is a block of its own
+    assert got == [sets[:2], sets[2:3], sets[3:]]
+
+
+# The kernels split a batch into blocks of at most _BLOCK_ITEMS shingles or
+# words; a budget of a few items puts block boundaries inside every batch,
+# between docs that share shingles, and makes single docs oversized.
+@settings(max_examples=200, deadline=None)
+@given(
+    texts=st.lists(
+        st.one_of(st.none(), st.text(alphabet="ab AB\t函数　", max_size=40)),
+        max_size=12,
+    ),
+    budget=st.integers(1, 8),
+)
+@example(texts=[], budget=1)
+@example(texts=["", "   ", None], budget=1)
+@example(texts=["a b c d e f g h i j k", "b c d", "", "a b c"], budget=3)
+def test_signature_kernels_match_oracles_across_blocks(texts, budget):
+    from unittest import mock
+
+    from signature_oracles import minhash_signature, simhash64
+
+    from textchunking_and_knowledgegraph_spark.operators import linking
+    from textchunking_and_knowledgegraph_spark.operators.dedup import (
+        _simhash_batch,
+        _word_shingles,
+    )
+
+    a, b = linking._perm_params(64)
+    with mock.patch.object(linking, "_BLOCK_ITEMS", budget):
+        for shingles in (linking._char_ngrams, _word_shingles):
+            got = linking._batch_signatures_from_sets(map(shingles, texts), a, b)
+            assert [row.tolist() for row in got] == [
+                minhash_signature(shingles(t), a, b) for t in texts
+            ]
+        assert _simhash_batch(texts).tolist() == [simhash64(t) for t in texts]
 
 
 def test_exact_dedup_partition_invariants(spark):
@@ -118,7 +167,7 @@ def test_sessionize_batch_invariants(spark):
 # round-2 operators: pure-Python properties (hypothesis-driven)
 # ---------------------------------------------------------------------------
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 
@@ -283,6 +332,64 @@ def test_png_rejects_unsupported_variants():
         decode_png(bytes(body))
     with pytest.raises(ValueError):
         decode_png(good[:30])  # truncated
+
+
+def _png_with_ihdr(w, h, interlace, idat):
+    import struct as _s
+
+    from textchunking_and_knowledgegraph_spark.operators.multimodal import (
+        _PNG_SIG,
+        _png_chunk,
+    )
+
+    ihdr = _s.pack(">IIBBBBB", w, h, 8, 0, 0, 0, interlace)
+    return (_PNG_SIG + _png_chunk(b"IHDR", ihdr) + _png_chunk(b"IDAT", idat)
+            + _png_chunk(b"IEND", b""))
+
+
+def test_png_oversized_header_fails_before_allocating():
+    """A 68-byte interlaced gray PNG whose IHDR claims 60000x60000: the
+    decoder must refuse it from the header, not try to allocate the
+    3.35 GiB sample array."""
+    import tracemalloc
+    import zlib as _z
+
+    from textchunking_and_knowledgegraph_spark.operators.multimodal import (
+        decode_png,
+    )
+
+    png = _png_with_ihdr(60000, 60000, 1, _z.compress(b"\0\0\0"))
+    assert len(png) == 68
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="pixel"):
+            decode_png(png)
+        assert tracemalloc.get_traced_memory()[1] < 1 << 20
+    finally:
+        tracemalloc.stop()
+
+
+@pytest.mark.parametrize("interlace", [0, 1])
+def test_png_zlib_bomb_is_not_inflated(interlace):
+    """16x16 gray declares 272 (sequential) or 286 (Adam7) filtered bytes;
+    an IDAT that inflates to 64 MiB must fail after inflating one byte past
+    that, with no 64 MiB buffer ever allocated."""
+    import tracemalloc
+    import zlib as _z
+
+    from textchunking_and_knowledgegraph_spark.operators.multimodal import (
+        decode_png,
+    )
+
+    png = _png_with_ihdr(16, 16, interlace, _z.compress(b"\0" * (64 << 20), 9))
+    assert len(png) < 128 << 10
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="inflates past"):
+            decode_png(png)
+        assert tracemalloc.get_traced_memory()[1] < 1 << 20
+    finally:
+        tracemalloc.stop()
 
 
 from textchunking_and_knowledgegraph_spark.operators.chunker import (  # noqa: E402

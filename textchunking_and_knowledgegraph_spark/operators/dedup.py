@@ -13,9 +13,8 @@ candidate generation is hash/LSH blocking; only survivors get exact scoring.
 
 from __future__ import annotations
 
-import functools
-import hashlib
 import re
+from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
@@ -25,7 +24,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.io import estimate_input_splits
-from .linking import banded
+from .linking import (
+    _batch_signatures_from_sets,
+    _block_layout,
+    _blocks,
+    _md5_heads,
+    _perm_params,
+    banded,
+)
 
 # ---------------------------------------------------------------------------
 # exact
@@ -83,12 +89,18 @@ def _ascii_lower_col(c: F.Column) -> F.Column:
     return F.translate(c, _ASCII_UPPER, _ASCII_UPPER.lower())
 
 
-def _word_shingles(text: str, k: int = 3) -> set[str]:
-    words = [
+def _words(text: str | None) -> list[str]:
+    """ASCII case-fold + ASCII-whitespace split, for cross-engine tokenizer
+    parity -- see the _ASCII_WS / _ASCII_LOWER_TAB rationales above."""
+    return [
         w
         for w in _ASCII_WS.split((text or "").translate(_ASCII_LOWER_TAB))
         if w
     ]
+
+
+def _word_shingles(text: str, k: int = 3) -> set[str]:
+    words = _words(text)
     if len(words) < k:
         return {" ".join(words)} if words else set()
     return {" ".join(words[i : i + k]) for i in range(len(words) - k + 1)}
@@ -117,14 +129,12 @@ def with_minhash_shingles(
     word-shingle Jaccard the verify applies. Measured at sf0.1: 341k
     candidate pairs for 160 true pairs under the char basis; the aligned
     word basis prunes candidates to near the true pair set."""
-    from .linking import _batch_signatures_from_sets, _perm_params
-
     a, b = _perm_params(n_perm)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _sig(texts: pd.Series) -> pd.Series:
         return _batch_signatures_from_sets(
-            [_word_shingles(t, k) for t in texts], a, b
+            (_word_shingles(t, k) for t in texts), a, b
         )
 
     return df.withColumn("sig", _sig(F.col(text_col)))
@@ -346,45 +356,45 @@ def sig_prefiltered_verify(
 # simhash
 # ---------------------------------------------------------------------------
 
-@functools.lru_cache(maxsize=1 << 20)
-def _word_signbits(w: str) -> np.ndarray:
-    """+-1 bit vector of a word's 64-bit hash — the first 8 md5 bytes,
-    big-endian (bit i = bit i of that integer, LSB-first). md5 rather than
-    a faster non-cryptographic hash so the DuckDB oracle can recompute the
-    identical fingerprint from `md5(word)` hex nibbles (the same
-    engine-portability trade the random-walk draw makes; graph.py). Cached:
-    token distributions are Zipfian, so within an executor the hot
-    vocabulary hits the cache and the per-word hashing cost amortizes ~0."""
-    h = np.uint64(
-        int.from_bytes(
-            hashlib.md5(w.encode(), usedforsecurity=False).digest()[:8], "big"
-        )
+def _word_signbits(heads: np.ndarray) -> np.ndarray:
+    """(len(heads), 64) int8 rows of +-1: bit i of each word's 64-bit hash
+    (``_md5_heads``: the first 8 md5 bytes, big-endian; bit i = bit i of
+    that integer, LSB-first) as +1 if set, else -1 -- the bit layout the
+    DuckDB oracle reads back from `md5(word)` hex nibbles."""
+    bits = (heads[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)
+    return bits.astype(np.int8) * 2 - 1
+
+
+def _simhash_block(block: list[list[str]]) -> np.ndarray:
+    """uint64 simhash per word list: bit i set iff the words' bit-i votes
+    (with multiplicity) sum above zero; an empty list gives 0."""
+    out = np.zeros(len(block), dtype=np.uint64)
+    rows, starts = _block_layout(block)
+    if not len(rows):
+        return out
+    uniq, inv = np.unique(
+        _md5_heads([w for ws in block for w in ws]), return_inverse=True
     )
-    bits = (h >> np.arange(64, dtype=np.uint64)) & np.uint64(1)
-    return np.where(bits == 1, np.int64(1), np.int64(-1))
+    votes = np.add.reduceat(
+        _word_signbits(uniq)[inv], starts, axis=0, dtype=np.int32
+    )
+    packed = np.packbits(votes > 0, axis=1, bitorder="little")
+    out[rows] = packed.view("<u8").ravel()
+    return out
 
 
-def _simhash64(text: str) -> int:
-    # ASCII-whitespace split + ASCII case-fold for cross-engine tokenizer
-    # parity -- see the _ASCII_WS / _ASCII_LOWER_TAB rationales above.
-    words = [
-        w
-        for w in _ASCII_WS.split((text or "").translate(_ASCII_LOWER_TAB))
-        if w
-    ]
-    if not words:
-        return -(1 << 63)
-    acc = np.sum([_word_signbits(w) for w in words], axis=0)
-    out = 0
-    for i in range(64):
-        if acc[i] > 0:
-            out |= 1 << i
-    return out - (1 << 63)  # signed for LongType
+def _simhash_batch(texts: Iterable[str | None]) -> np.ndarray:
+    """int64 simhash per text, in word blocks of at most ``_BLOCK_ITEMS``
+    (linking.py). Offset by -2^63 into the signed LongType range, so the
+    empty text is -2^63."""
+    fps = [_simhash_block(block) for block in _blocks(map(_words, texts))]
+    u = np.concatenate(fps) if fps else np.zeros(0, dtype=np.uint64)
+    return (u ^ np.uint64(1 << 63)).view(np.int64)
 
 
 @F.pandas_udf(T.LongType())
 def simhash_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(_simhash64)
+    return pd.Series(_simhash_batch(texts))
 
 
 def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -20,10 +20,13 @@ row_number()==1 with deterministic tie-break (score desc, entity asc) --
 replicating the reference's argmax-similarity W1 semantics.
 
 The minhash signature is computed by a vectorized pandas UDF (one Arrow batch
-per call); banding/join/re-rank/top-1 are pure DataFrame algebra. The
-dictionary side is small (<=100k) -> its banded form is broadcast, so the only
-shuffle is on the (usually much larger) mention side -- and none at all when
-mentions fit the broadcast threshold.
+per call) that works through the batch in blocks of at most ``_BLOCK_ITEMS``
+grams: numpy hashes, permutes and min-reduces a block at a time, so a
+worker's memory is bounded by the block, not the batch, and nothing is
+cached between batches. Banding/join/re-rank/top-1 are pure DataFrame
+algebra. The dictionary side is small (<=100k) -> its banded form is
+broadcast, so the only shuffle is on the (usually much larger) mention side
+-- and none at all when mentions fit the broadcast threshold.
 
 Hand-rolled rather than pyspark.ml MinHashLSH: deterministic seeds, no MLlib
 model state to checkpoint, banding exposed as plain columns (SURVEY.md 4.2).
@@ -31,8 +34,8 @@ model state to checkpoint, banding exposed as plain columns (SURVEY.md 4.2).
 
 from __future__ import annotations
 
-import functools
 import hashlib
+from collections.abc import Iterable, Iterator, Sized
 
 import numpy as np
 import pandas as pd
@@ -62,67 +65,94 @@ def _char_ngrams(text: str, n: int = 2) -> set[str]:
     return {t[i : i + n] for i in range(len(t) - n + 1)}
 
 
-@functools.lru_cache(maxsize=1 << 20)
-def _gram_hash(gram: str) -> int:
-    # stable 8-byte hash (first 8 md5 bytes), independent of
-    # PYTHONHASHSEED; md5 rather than blake2b so the DuckDB dedup_minhash
-    # oracle can recompute the identical gram hashes from `md5(gram)` hex
-    # nibbles (the same engine-portability trade the simhash fingerprint
-    # and the random-walk draw make); cached -- gram vocabularies are tiny
-    # relative to corpus size
-    return (
-        int.from_bytes(
-            hashlib.md5(gram.encode(), usedforsecurity=False).digest()[:8], "big"
-        )
-        >> 3
+def _md5_heads(items: list[str]) -> np.ndarray:
+    """uint64 per string: its first 8 md5 bytes, big-endian. Stable across
+    processes (independent of PYTHONHASHSEED); md5 rather than blake2b or a
+    faster non-cryptographic hash so the DuckDB oracles can recompute it
+    from `md5(s)` hex nibbles (the same engine-portability trade the
+    random-walk draw makes). Not memoized: a worker keeps no vocabulary
+    between calls."""
+    md5 = hashlib.md5
+    heads = b"".join(
+        [md5(s.encode(), usedforsecurity=False).digest()[:8] for s in items]
     )
+    return np.frombuffer(heads, dtype=">u8").astype(np.uint64)
 
 
-def _signature(text: str, a: np.ndarray, b: np.ndarray) -> list[int]:
-    grams = _char_ngrams(text)
-    if not grams:
-        return [0] * len(a)
-    base = np.fromiter((_gram_hash(g) for g in grams), dtype=np.int64, count=len(grams))
-    # (n_perm, n_grams) via broadcasting; object dtype avoided by mod-first math
-    vals = (a[:, None] * (base[None, :] % _P)) % _P
-    vals = (vals + b[:, None]) % _P
-    return vals.min(axis=1).tolist()
+# Shingles (or words) per block of a batch kernel. A block's working set is
+# O(_BLOCK_ITEMS * n_perm) int64 -- ~4 MB at 64 permutations -- whatever
+# the Arrow batch size; a single document larger than the budget is a
+# block on its own.
+_BLOCK_ITEMS = 1 << 13
+
+
+def _blocks(item_sets: Iterable[Sized]) -> Iterator[list]:
+    """Consecutive runs of ``item_sets`` whose sizes sum to at most
+    ``_BLOCK_ITEMS`` (or a single oversized set). Lazy: only the current
+    block is held."""
+    block: list = []
+    n = 0
+    for s in item_sets:
+        if block and n + len(s) > _BLOCK_ITEMS:
+            yield block
+            block, n = [], 0
+        block.append(s)
+        n += len(s)
+    if block:
+        yield block
+
+
+def _block_layout(block: list[Sized]) -> tuple[np.ndarray, np.ndarray]:
+    """(indices of the non-empty members, their start offsets in the
+    flattened block) -- the ``reduceat`` segments of a block."""
+    sizes = np.fromiter(map(len, block), dtype=np.int64, count=len(block))
+    rows = np.flatnonzero(sizes)
+    starts = np.concatenate(([0], np.cumsum(sizes[rows])[:-1]))
+    return rows, starts
+
+
+def _block_minhash(block: list[set[str]], a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(len(block), n_perm) signatures; an empty set keeps the all-zero
+    sentinel row."""
+    out = np.zeros((len(block), len(a)), dtype=np.int64)
+    rows, starts = _block_layout(block)
+    if not len(rows):
+        return out
+    # gram hash = md5 head >> 3, the basis the DuckDB dedup_minhash oracle
+    # recomputes from `md5(gram)` hex nibbles
+    hashes = _md5_heads([g for gs in block for g in gs]) >> np.uint64(3)
+    uniq, inv = np.unique(hashes.astype(np.int64), return_inverse=True)
+    # h_i(x) = ((a_i * (x mod P)) mod P + b_i) mod P, with the int64
+    # wrap-around of the product -- the exact math the DuckDB oracle
+    # replays; done in place on one (U, n_perm) table
+    vals = (uniq % _P)[:, None] * a[None, :]
+    np.remainder(vals, _P, out=vals)
+    vals += b[None, :]
+    np.remainder(vals, _P, out=vals)
+    out[rows] = np.minimum.reduceat(vals[inv], starts, axis=0)
+    return out
 
 
 def _batch_signatures(texts: pd.Series, a: np.ndarray, b: np.ndarray) -> pd.Series:
-    """Batch-vectorized minhash over char-2grams: identical output to
-    per-doc ``_signature`` (asserted in tests)."""
-    return _batch_signatures_from_sets([_char_ngrams(t) for t in texts], a, b)
+    """Minhash over char-2grams (the linking basis)."""
+    return _batch_signatures_from_sets(map(_char_ngrams, texts), a, b)
 
 
 def _batch_signatures_from_sets(
-    gram_sets: list[set[str]], a: np.ndarray, b: np.ndarray
+    gram_sets: Iterable[set[str]], a: np.ndarray, b: np.ndarray
 ) -> pd.Series:
-    """Batch-vectorized minhash over arbitrary shingle sets: each distinct
-    gram in the Arrow batch is hashed and permuted ONCE -- with
-    Zipfian/overlapping vocabularies the per-doc cost collapses to a gather
-    + column-min over a shared (U, n_perm) table. Shared by the char-ngram
-    linking basis and the word-shingle dedup basis (operators/dedup.py)."""
-    vocab: dict[str, int] = {}
-    for gs in gram_sets:
-        for g in gs:
-            if g not in vocab:
-                vocab[g] = len(vocab)
-    if not vocab:
-        return pd.Series([[0] * len(a)] * len(gram_sets))
-    base = np.fromiter((_gram_hash(g) for g in vocab), dtype=np.int64, count=len(vocab))
-    # (U, n_perm) permuted values, same mod-first math as _signature
-    vals = (a[None, :] * (base[:, None] % _P)) % _P
-    vals = (vals + b[None, :]) % _P
-    zero = [0] * len(a)
-    out = []
-    for gs in gram_sets:
-        if not gs:
-            out.append(zero)
-            continue
-        idx = np.fromiter((vocab[g] for g in gs), dtype=np.int64, count=len(gs))
-        out.append(vals[idx].min(axis=0).tolist())
-    return pd.Series(out)
+    """Minhash over arbitrary shingle sets, one int64 row of n_perm per
+    set (a view into the batch's one signature array). Shared by the
+    char-ngram linking basis and the word-shingle dedup basis
+    (operators/dedup.py).
+
+    The sets are consumed lazily in blocks of at most ``_BLOCK_ITEMS``
+    shingles. Per block: hash the flattened shingles once, ``np.unique``
+    the hashes, permute each distinct hash once, gather back and take
+    ``np.minimum.reduceat`` over the per-set offsets -- no per-set Python
+    loop, and memory bounded by the block, not by the Arrow batch."""
+    sigs = [_block_minhash(block, a, b) for block in _blocks(gram_sets)]
+    return pd.Series(list(np.concatenate(sigs)) if sigs else [], dtype=object)
 
 
 def with_minhash(df: DataFrame, text_col: str, n_perm: int = _N_PERM_DEFAULT) -> DataFrame:

@@ -167,6 +167,10 @@ def decode_ppm(payload: bytes) -> np.ndarray:
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+# Largest image decode_png accepts (8192 x 8192). IHDR's width and height
+# size every buffer of the decode, so they are checked before any of them
+# is allocated.
+_PNG_MAX_PIXELS = 1 << 26
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
@@ -309,7 +313,10 @@ def decode_png(payload: bytes) -> np.ndarray:
     rejects loudly rather than being misread. Output shapes: HxW (gray),
     HxWx2 (gray+alpha), HxWx3 (RGB / opaque palette), HxWx4 (RGBA /
     palette+tRNS). Pure stdlib zlib + numpy; ancillary chunks are skipped
-    by walking the chunk list, matching real-world files."""
+    by walking the chunk list, matching real-world files. Hostile headers
+    fail with ValueError before the big allocations: an image over
+    ``_PNG_MAX_PIXELS``, or image data that inflates past the size its
+    IHDR implies (a zlib bomb is inflated to one byte past that size)."""
     import zlib
 
     if payload is None or len(payload) < len(_PNG_SIG) + 12 or payload[:8] != _PNG_SIG:
@@ -349,12 +356,29 @@ def decode_png(payload: bytes) -> np.ndarray:
         raise ValueError("palette PNG missing PLTE chunk")
     if w <= 0 or h <= 0:
         raise ValueError("bad PNG dimensions")
-    raw = zlib.decompress(bytes(idat))
+    if w * h > _PNG_MAX_PIXELS:
+        raise ValueError(
+            f"PNG {w}x{h} exceeds the {_PNG_MAX_PIXELS}-pixel decode cap"
+        )
     bits_pp = depth * ch
     bpp = max(1, bits_pp // 8)
 
     def _stride(width: int) -> int:
         return (width * bits_pp + 7) // 8
+
+    # filtered scanline bytes the IHDR implies: one filter byte per row, of
+    # the whole image or of each non-empty Adam7 pass
+    passes = []
+    for x0, y0, dx, dy in _ADAM7 if interlace else [(0, 0, 1, 1)]:
+        pw = (w - x0 + dx - 1) // dx
+        ph = (h - y0 + dy - 1) // dy
+        if pw > 0 and ph > 0:
+            passes.append((x0, y0, dx, dy, pw, ph, ph * (_stride(pw) + 1)))
+    expected = sum(n for *_, n in passes)
+    # inflate at most one byte past that, so a zlib bomb costs no more
+    raw = zlib.decompressobj().decompress(bytes(idat), expected + 1)
+    if len(raw) > expected:
+        raise ValueError("PNG image data inflates past its IHDR size")
 
     def _read(sub: bytes, sw: int, sh: int) -> np.ndarray:
         rows = _png_unfilter(sub, sh, _stride(sw), bpp)
@@ -365,18 +389,13 @@ def decode_png(payload: bytes) -> np.ndarray:
     if interlace == 0:
         samples = _read(raw, w, h)
     else:  # Adam7: seven sub-images concatenated in the one zlib stream
+        if len(raw) != expected:
+            raise ValueError("PNG interlaced scanline data size mismatch")
         samples = np.zeros((h, w) if ch == 1 else (h, w, ch), dtype=np.uint8)
         off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
-            n = ph * (_stride(pw) + 1)
+        for x0, y0, dx, dy, pw, ph, n in passes:
             samples[y0::dy, x0::dx] = _read(raw[off:off + n], pw, ph)
             off += n
-        if off != len(raw):
-            raise ValueError("PNG interlaced scanline data size mismatch")
 
     if color_type == 3:
         if int(samples.max()) >= len(plte):

@@ -9,9 +9,14 @@ triples, plus a second content-extractor pass) and the separate text packer
 still existed and matched them, so they keep those implementations'
 behaviour as the reference."""
 
+import re
+import signal
+import time
 from collections import Counter
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
@@ -159,3 +164,68 @@ def test_cpp_rust_extractor_common_shapes():
     got_rs = {(s, p, o) for s, p, o, _, _ in _extract_rust("c.rs", rs)}
     assert ("c.rs", "defines", "f") in got_rs
     assert ("c.rs", "defines", "g") in got_rs
+
+
+# The method pattern before it was made linear: the reference for the
+# matches (spans and names) the linear pattern must reproduce.
+_JAVA_METHOD_BACKTRACKING = re.compile(
+    r"(?:public|private|protected)\s+(?:static\s+)?[\w<>\[\],\s]+?\s+(\w+)\s*\([^)]*\)\s*\{"
+)
+_WS = st.sampled_from([" ", "  ", "\n", "\t", "\u3000", "", " \n "])
+_JAVA_METHODISH = st.tuples(
+    st.sampled_from(["public", "private", "protected", "publicx"]), _WS,
+    st.sampled_from(["", "static "]),
+    st.sampled_from(["int", "void", "List<String>", "Map<K, V>", "int[]", "x y", "的", ""]),
+    _WS,
+    st.sampled_from(["foo", "if", "bar1", "名字", "<T>", ""]), _WS,
+    st.sampled_from(["(", "(", "", "(("]),
+    st.sampled_from(["", "int a, B<c> d", "", "{"]),
+    st.sampled_from([")", ")", ")", "", "))"]), _WS,
+    st.sampled_from(["{", "{", "{", "", ";"]),
+).map("".join)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(
+    st.one_of(_JAVA_METHODISH, st.sampled_from([" ", "\n", "}", "public", "x", "(", ")"])),
+    min_size=1, max_size=5,
+))
+@example(["public   foo() {"])  # a whitespace-only type still counts
+@example(["public static foo() {"])  # "static" is then the type
+@example(["public int " * 3 + "x() {"])
+def test_java_method_pattern_matches_backtracking_form(parts):
+    from textchunking_and_knowledgegraph_spark.operators.extract import _JAVA_METHOD
+
+    text = "".join(parts)
+    want = [(m.span(), m.group(1)) for m in _JAVA_METHOD_BACKTRACKING.finditer(text)]
+    got = [(m.span(), m.group(1)) for m in _JAVA_METHOD.finditer(text) if m.group(1)]
+    assert got == want
+
+
+def test_java_extractor_is_linear_on_hostile_runs():
+    """Doubling a whitespace run (or a run of modifiers) must stay well
+    under 4x the time. The backtracking pattern took 0.13 / 0.88 / 7.1 s at
+    250 / 500 / 1,000 spaces; the alarm bounds the test if that returns."""
+    from textchunking_and_knowledgegraph_spark.operators.extract import _extract_java
+
+    def _hang(*_):
+        raise TimeoutError("java extraction did not finish")
+
+    def best_of_5(text):
+        times = []
+        for _ in range(5):
+            t = time.perf_counter()
+            list(_extract_java("A.java", text))
+            times.append(time.perf_counter() - t)
+        return min(times)
+
+    prev = signal.signal(signal.SIGALRM, _hang)
+    signal.alarm(20)
+    try:
+        for shape in (lambda n: "public " + " " * n + "x",
+                      lambda n: "public " * (n // 7) + "x"):
+            small, large = best_of_5(shape(100_000)), best_of_5(shape(200_000))
+            assert large < 3 * small + 0.005, (small, large)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, prev)

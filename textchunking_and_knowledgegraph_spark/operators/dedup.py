@@ -684,13 +684,16 @@ def dedup_decisions(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> 
     before a corpus can actually be filtered.
 
     Near-dup similarity is not transitive, but curation treats it as an
-    equivalence: connected components over the pair graph (iterative
-    min-label propagation with pointer jumping, operators/canonicalize.py)
-    group the documents; each cluster's keeper is the min id IN THE ID'S
-    NATIVE TYPE (CC labels are strings, whose lexicographic min would elect
-    "10" over "2" for numeric ids — the keeper is therefore re-derived per
-    component with a typed min + join back). Documents in no pair keep
-    themselves. No UDF."""
+    equivalence: connected components over the pair graph
+    (operators/canonicalize.py: one numpy union-find task for a pair graph
+    of up to ``_LOCAL_CC_EDGES`` symmetrized rows, such as a 25k-doc store;
+    iterative min-label propagation with pointer jumping above that, such
+    as the 1.28M-doc stress graph) group the documents; each cluster's
+    keeper is the min id IN THE ID'S NATIVE TYPE (CC labels are strings,
+    whose lexicographic min would elect "10" over "2" for numeric ids — the
+    keeper is therefore re-derived per component with a typed min + join
+    back). Documents in no pair keep
+    themselves. The keeper step itself runs no UDF."""
     from .canonicalize import connected_components
 
     ids = df.select(F.col(id_col).alias("orig_id")).distinct().withColumn(

@@ -58,7 +58,17 @@ _JS_FUNC = re.compile(r"(?:function\s+(\w+)\s*\(|(?:const|let|var)\s+(\w+)\s*=\s
 
 _JAVA_IMPORT = re.compile(r"^\s*import\s+(?:static\s+)?([\w.]+)\s*;", re.M)
 _JAVA_CLASS = re.compile(r"(?:class|interface)\s+(\w+)(?:\s+extends\s+([\w.,\s]+?))?(?:\s+implements\s+[\w.,\s]+)?\s*\{")
-_JAVA_METHOD = re.compile(r"(?:public|private|protected)\s+(?:static\s+)?[\w<>\[\],\s]+?\s+(\w+)\s*\([^)]*\)\s*\{")
+# modifier, whitespace, a non-empty type (type chars or whitespace), whitespace,
+# then the name: the last word before "(". Linear time: the type loop is
+# possessive and stops only at the whitespace before "name(", so nothing
+# backtracks over a whitespace run. When the tail fails, group 1 is None and
+# the match still spans the run, so the modifiers inside it are not scanned
+# again (they would fail at the same "(").
+_JAVA_METHOD = re.compile(
+    r"(?:public|private|protected)\s"
+    r"(?:[\w<>\[\],]|\s(?!\w++\s*+\())++"
+    r"(?:\s(\w++)\s*+\([^)]*+\)\s*+\{)?"
+)
 
 _GO_IMPORT_BLOCK = re.compile(r"import\s*\(([^)]*)\)", re.DOTALL)
 _GO_IMPORT_ONE = re.compile(r'^\s*import\s+"([^"]+)"', re.M)
@@ -138,7 +148,7 @@ def _extract_java(path: str, content: str) -> Iterator[tuple[str, str, str, str,
                 yield (m.group(1), "inherits", base, "class", "class")
     for m in _JAVA_METHOD.finditer(content):
         name = m.group(1)
-        if name not in _KEYWORDS:
+        if name and name not in _KEYWORDS:
             yield (path, "defines", name, "file", "function")
 
 

@@ -32,7 +32,8 @@ def cc_path(request, monkeypatch):
 
 
 def _cc(spark, pairs):
-    edges = spark.createDataFrame(pairs, "src string, dst string")
+    t = "long" if any(isinstance(x, int) for p in pairs for x in p) else "string"
+    edges = spark.createDataFrame(pairs, f"src {t}, dst {t}")
     return {r.id: r.component for r in connected_components(edges).collect()}
 
 
@@ -110,11 +111,21 @@ def test_cc_round_cap_raises(spark, monkeypatch):
 _IDS = ["1", "2", "10", "100", "a", "B", "é", "函数", "概念", "\uff01", "😀", "𝔘", None]
 
 
+# long ids: numeric order (10 > 2), negatives, and values past 32 bits
+_LONG_IDS = [1, 2, 10, 100, -3, 2**31, 2**40, -(2**62), None]
+
+
+def _pairs_of(ids):
+    return st.lists(st.tuples(st.sampled_from(ids), st.sampled_from(ids)), max_size=12)
+
+
 @settings(max_examples=12, deadline=None)
-@given(st.lists(st.tuples(st.sampled_from(_IDS), st.sampled_from(_IDS)), max_size=12))
+@given(st.one_of(_pairs_of(_IDS), _pairs_of(_LONG_IDS)))
 @example([])
 @example([("10", "2"), ("2", "10"), ("2", "10"), ("😀", "\uff01"), ("a", "a"),
           (None, "x"), ("y", None), (None, None), ("函数", "概念"), ("1", "1")])
+@example([(10, 2), (2, 10), (2**40, -3), (-3, 10), (100, 100), (None, 7),
+          (2**31, None), (-(2**62), 2**31)])
 def test_cc_paths_match_union_find_oracle(spark, pairs):
     want = _union_find_oracle(pairs)
     for gate in _GATES.values():
@@ -123,15 +134,47 @@ def test_cc_paths_match_union_find_oracle(spark, pairs):
 
 
 def test_dedup_decisions_typed_keeper(spark, cc_path):
-    """Components are labelled by their string min ("10" < "2"); the
-    keeper is still the min in the id's own type."""
+    """Components run on the ids in their own type, so the keeper is the
+    min in that type: 2 for long ids, "10" for string ids ("10" < "2").
+    A random long-id graph (negatives, values past 32 bits) keeps the
+    union-find oracle's component minimum."""
     from textchunking_and_knowledgegraph_spark.operators.dedup import dedup_decisions
 
-    docs = spark.createDataFrame([(i,) for i in (2, 3, 7, 10, 20)], "doc_id long")
-    pairs = spark.createDataFrame([(10, 2), (20, 3)], "id_a long, id_b long")
-    out = {r.id: (r.keeper, r.keep) for r in dedup_decisions(docs, pairs).collect()}
+    def decisions(ids, pairs, t):
+        docs = spark.createDataFrame([(i,) for i in ids], f"doc_id {t}")
+        pairs = spark.createDataFrame(pairs, f"id_a {t}, id_b {t}")
+        return {r.id: (r.keeper, r.keep) for r in dedup_decisions(docs, pairs).collect()}
+
+    out = decisions((2, 3, 7, 10, 20), [(10, 2), (20, 3)], "long")
     assert out == {2: (2, True), 10: (2, False), 3: (3, True), 20: (3, False),
                    7: (7, True)}
+    out = decisions(("2", "3", "7", "10", "20"), [("10", "2"), ("20", "3")], "string")
+    assert out == {"10": ("10", True), "2": ("10", False), "20": ("20", True),
+                   "3": ("20", False), "7": ("7", True)}
+
+    rng = random.Random(3)
+    ids = rng.sample(range(-(2**40), 2**40), 60)
+    pairs = [tuple(rng.sample(ids, 2)) for _ in range(45)]
+    comp = _union_find_oracle(pairs)
+    out = decisions(ids, pairs, "long")
+    assert out == {i: (comp.get(i, i), comp.get(i, i) == i) for i in ids}
+
+
+def test_cc_reads_its_input_once(spark, cc_path):
+    """Both directions of every edge come from one evaluation of the input
+    plan: a union of two selects ran an upstream UDF (such as the near-dup
+    verify stage) once per direction."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("long")
+    def counted(s: pd.Series) -> pd.Series:
+        calls.add(len(s))
+        return s
+
+    base = spark.createDataFrame([(i, i + 1) for i in range(0, 40, 2)], "a long, b long")
+    edges = base.select(counted("a").alias("src"), F.col("b").alias("dst"))
+    assert len(connected_components(edges).collect()) == 40
+    assert calls.value == 20
 
 
 def test_local_kernel_is_bounded_at_the_gate():

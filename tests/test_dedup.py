@@ -44,6 +44,15 @@ def test_minhash_near_dups(spark):
     assert not any(4 in p for p in pairs)
 
 
+def test_minhash_verify_is_one_python_stage(spark):
+    """The exact Jaccard verify runs once per surviving pair. As a
+    deterministic UDF it was inlined into both the threshold filter (pushed
+    below its projection) and the projection above it: two Python stages."""
+    pairs = minhash_near_dups(_docs(spark), threshold=0.6)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_ngram_jaccard_exact_matches_python_metric(spark):
     """The exact all-pairs baseline (JVM array algebra) must agree with the
     Python `_word_shingles` metric — the same verify function the LSH path

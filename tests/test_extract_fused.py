@@ -229,3 +229,64 @@ def test_java_extractor_is_linear_on_hostile_runs():
     finally:
         signal.alarm(0)
         signal.signal(signal.SIGALRM, prev)
+
+
+# The class pattern before it was made linear: the reference for the
+# matches (spans, name, extends list) the linear pattern must reproduce.
+_JAVA_CLASS_BACKTRACKING = re.compile(
+    r"(?:class|interface)\s+(\w+)(?:\s+extends\s+([\w.,\s]+?))?"
+    r"(?:\s+implements\s+[\w.,\s]+)?\s*\{"
+)
+_JAVA_CLASSISH = st.one_of(_WS, st.sampled_from([
+    "class", "interface", "subclass", "extends", "implements", "implementsX",
+    "extends{", "A", "b.C", "D,E", ",", ".", "x", "的", "{", "(", "}", ";",
+]))
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(_JAVA_CLASSISH, min_size=1, max_size=14))
+@example(["class A extends   {"])  # an all-whitespace extends list
+@example(["class A extends B  implements C, D {"])
+@example(["class A extends B implements {"])  # "implements" joins the list
+@example(["class A extends B x class C extends D {"])
+@example(["class A B class C {"])
+def test_java_class_pattern_matches_backtracking_form(parts):
+    from textchunking_and_knowledgegraph_spark.operators.extract import _JAVA_CLASS
+
+    text = "".join(parts)
+    want = [(m.span(), m.group(1), m.group(2))
+            for m in _JAVA_CLASS_BACKTRACKING.finditer(text)]
+    got = [(m.span(), m.group(1), m.group(2))
+           for m in _JAVA_CLASS.finditer(text) if m.group(3)]
+    assert got == want
+
+
+def test_java_class_pattern_is_linear_on_hostile_runs():
+    """Doubling a whitespace run after ``extends`` (or a run of unclosed
+    declarations) must stay well under 4x the time. The backtracking
+    pattern took 0.043 / 0.274 / 2.12 s at 250 / 500 / 1,000 spaces; the
+    alarm bounds the test if that returns."""
+    from textchunking_and_knowledgegraph_spark.operators.extract import _extract_java
+
+    def _hang(*_):
+        raise TimeoutError("java extraction did not finish")
+
+    def best_of_5(text):
+        times = []
+        for _ in range(5):
+            t = time.perf_counter()
+            list(_extract_java("A.java", text))
+            times.append(time.perf_counter() - t)
+        return min(times)
+
+    prev = signal.signal(signal.SIGALRM, _hang)
+    signal.alarm(20)
+    try:
+        for shape in (lambda n: "class A extends " + " " * n + "x",
+                      lambda n: "class A extends B " * (n // 18) + "(",
+                      lambda n: "interface A implements" + " " * n + "x"):
+            small, large = best_of_5(shape(100_000)), best_of_5(shape(200_000))
+            assert large < 3 * small + 0.005, (small, large)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, prev)

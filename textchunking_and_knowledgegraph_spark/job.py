@@ -68,7 +68,7 @@ def run_dedup(
     decisions -> parquet. Pair strategies are the bucketed scale paths
     (never all-pairs): exact = sha groupBy, minhash = banded LSH + verify,
     simhash = banded hamming; near-dup pairs collapse to clusters via
-    connected components (min-label, pointer jumping) and each cluster
+    connected components (operators/canonicalize.py), and each cluster
     keeps its min id. exact/minhash also persist the incremental store
     (plans/incremental_dedup.py) so later batches curate in O(new)."""
     from .operators.dedup import dedup_decisions, simhash_near_dups

@@ -5,8 +5,8 @@ The scale-out of the reference's single-node dedup-and-vote
 (`EntityLinking/Entity_Linking.py:43-72` ordered dedup;
 `StoreToNeo4j/Neo4j_functions.py:156-166` label-propagation vote): alias
 edges (from linking + exact normalized-name matches) define an undirected
-graph; each component collapses to one representative (its lexicographically
-smallest member -- deterministic).
+graph; each component collapses to one representative (its smallest member
+in the id's own type -- deterministic).
 
 ``connected_components`` is the one entry point (dedup decisions,
 first-seen store decisions, alias components, triple canonicalization) and
@@ -63,11 +63,19 @@ def connected_components(
     the connected component. Isolated vertices of the edge set are included
     (every endpoint appears); self-loops and edges with a null endpoint are
     dropped. The result is checkpointed (no lineage into ``edges``)."""
-    # persist the symmetrized edge set: every loop round joins it twice, and
-    # without the barrier the union+distinct re-executes per round
+    # both directions come from one read of ``edges``, so its plan (e.g. a
+    # verify UDF) runs once; a union of two selects would run it twice.
+    # Persisted: every loop round joins it twice, and without the barrier
+    # the inline+distinct re-executes per round
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(
+            F.inline(
+                F.array(
+                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+                )
+            )
+        )
         .filter(F.col("a") != F.col("b"))
         .distinct()
         .persist()

@@ -116,6 +116,13 @@ def _shingle_jaccard(left: pd.Series, right: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+# Nondeterministic to the optimizer only: a deterministic UDF would be
+# inlined into the threshold filter pushed below its projection AND into the
+# projection above it, and the verify would run twice (on every survivor,
+# then again on the verified pairs).
+_shingle_jaccard = _shingle_jaccard.asNondeterministic()
+
+
 def with_minhash_shingles(
     df: DataFrame, text_col: str = "text", n_perm: int = 64, k: int = 3
 ) -> DataFrame:
@@ -688,36 +695,19 @@ def dedup_decisions(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> 
     (operators/canonicalize.py: one numpy union-find task for a pair graph
     of up to ``_LOCAL_CC_EDGES`` symmetrized rows, such as a 25k-doc store;
     iterative min-label propagation with pointer jumping above that, such
-    as the 1.28M-doc stress graph) group the documents; each cluster's
-    keeper is the min id IN THE ID'S NATIVE TYPE (CC labels are strings,
-    whose lexicographic min would elect "10" over "2" for numeric ids — the
-    keeper is therefore re-derived per component with a typed min + join
-    back). Documents in no pair keep
-    themselves. The keeper step itself runs no UDF."""
+    as the 1.28M-doc stress graph) group the documents. Components run on
+    the ids in their own type and are labelled with their min id, so the
+    label is the keeper: 2 wins over 10 for numeric ids. Documents in no
+    pair keep themselves. Precondition: every pair id is an id of ``df``
+    (each strategy above emits pairs of its input's ids). The keeper step
+    itself runs no UDF."""
     from .canonicalize import connected_components
 
-    ids = df.select(F.col(id_col).alias("orig_id")).distinct().withColumn(
-        "id", F.col("orig_id").cast("string")
-    )
-    edges = pairs.select(
-        F.col("id_a").cast("string").alias("src"),
-        F.col("id_b").cast("string").alias("dst"),
-    )
-    comp = connected_components(edges)  # only ids that appear in a pair
-    # keeper per component from the SMALL paired-id side (components cover
-    # only ids that appear in a pair); the full 1.28M-id table is joined
-    # exactly once, against two broadcast-size maps
-    keepers = (
-        comp.join(ids.select("id", "orig_id"), "id")
-        .groupBy("component")
-        .agg(F.min("orig_id").alias("keeper"))
-    )
+    comp = connected_components(pairs, src="id_a", dst="id_b")
+    keeper = F.coalesce("component", "id")
     return (
-        ids.join(comp, "id", "left")
-        .join(keepers, "component", "left")
-        .select(
-            F.col("orig_id").alias("id"),
-            F.coalesce("keeper", F.col("orig_id")).alias("keeper"),
-            (F.col("orig_id") == F.coalesce("keeper", F.col("orig_id"))).alias("keep"),
-        )
+        df.select(F.col(id_col).alias("id"))
+        .distinct()
+        .join(comp, "id", "left")
+        .select("id", keeper.alias("keeper"), (F.col("id") == keeper).alias("keep"))
     )

@@ -57,7 +57,20 @@ _JS_CLASS = re.compile(r"class\s+(\w+)(?:\s+extends\s+([\w.]+))?")
 _JS_FUNC = re.compile(r"(?:function\s+(\w+)\s*\(|(?:const|let|var)\s+(\w+)\s*=\s*(?:async\s*)?(?:function|\([^)]*\)\s*=>))")
 
 _JAVA_IMPORT = re.compile(r"^\s*import\s+(?:static\s+)?([\w.]+)\s*;", re.M)
-_JAVA_CLASS = re.compile(r"(?:class|interface)\s+(\w+)(?:\s+extends\s+([\w.,\s]+?))?(?:\s+implements\s+[\w.,\s]+)?\s*\{")
+# keyword, name, optional "extends" list (group 2), optional "implements"
+# list, then "{" (group 3). Linear time: every run is possessive, and the
+# extends list ends at the first whitespace run that is followed by an
+# implements clause or by no further list character. A declaration whose run
+# of [\w.,\s] ends at anything but "{" still matches, with group 3 None,
+# so no keyword inside that run is scanned again (none of them can reach a
+# "{" either).
+_JAVA_CLASS = re.compile(
+    r"(?:class|interface)\s++(\w++)"
+    r"(?:\s++extends(?:\s++(?=[\w.,])|\s(?:\s(?=\s))*+)"
+    r"((?:[\w.,]++|\s++(?!implements\s[\w.,\s])(?=[\w.,]))++|\s))?+"
+    r"(?:\s++implements\s[\w.,\s]++)?+"
+    r"\s*+(?:(\{)|(?![\w.,\s]))"
+)
 # modifier, whitespace, a non-empty type (type chars or whitespace), whitespace,
 # then the name: the last word before "(". Linear time: the type loop is
 # possessive and stops only at the whitespace before "name(", so nothing
@@ -141,6 +154,8 @@ def _extract_java(path: str, content: str) -> Iterator[tuple[str, str, str, str,
     for m in _JAVA_IMPORT.finditer(content):
         yield (path, "imports", m.group(1), "file", "module")
     for m in _JAVA_CLASS.finditer(content):
+        if not m.group(3):
+            continue
         yield (path, "defines", m.group(1), "file", "class")
         if m.group(2):
             base = m.group(2).strip().split(",")[0].strip().split(".")[-1]

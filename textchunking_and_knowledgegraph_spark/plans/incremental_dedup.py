@@ -26,16 +26,18 @@ committed decisions and skips already-curated documents (reported as
 keeps working for external consumers (``batch`` surfaces as a partition
 column).
 
-Semantics -- first-seen-wins, the standard streaming-curation contract:
+Semantics -- first-seen-wins, the standard streaming-curation contract.
+The keeper rule: take connected components over the verified pairs that
+touch the new batch, with every OLD endpoint replaced by its cluster's
+keeper; a new document's keeper is the smallest old keeper in its
+component, else the component's min id, else (in no pair) itself. So:
   * existing decisions are IMMUTABLE: a new document can join an existing
-    cluster (keep=False, keeper = that cluster's keeper) but never changes
-    which old document is kept;
+    cluster (keep=False) but never changes which old document is kept;
   * a new document near-dup of TWO existing clusters joins the one with the
     smaller keeper; the old clusters are NOT merged (a batch recompute
     would merge them -- an accepted, tested divergence of incremental
     curation);
-  * new-new clusters among unmatched documents elect their min id, exactly
-    as the batch path does.
+  * new-new clusters elect their min id, exactly as the batch path does.
 
 Scale shape of ``add_documents`` (minhash): signatures run over the NEW
 batch only (Arrow UDF); candidate generation is an equi-join of the new
@@ -243,16 +245,15 @@ def write_dedup_store(
             "duplicates_dropped": n - kept, "store": store}
 
 
-def _new_minhash_edges(
+def _new_minhash_pairs(
     spark: SparkSession,
     store: str,
     new_corpus: DataFrame,
     old_texts: DataFrame,
     p: dict,
 ) -> tuple[DataFrame, DataFrame]:
-    """(edges, new_sigs): verified near-dup edges touching the new batch --
-    (new-new) pairs and (new-old) pairs with old endpoints already mapped
-    to their cluster keeper, columns (src, dst) -- plus the new batch's
+    """(verified, new_sigs): verified near-dup pairs (id_a, id_b) touching
+    the new batch -- new-new and new-old -- plus the new batch's
     checkpointed signature table so the caller publishes it without a
     second UDF pass. ``old_texts`` (id, text) is the selective-read source
     for exact verification: the store's own texts table by default, or the
@@ -275,27 +276,10 @@ def _new_minhash_edges(
     pairs = lsh_candidate_pairs(bd, max_bucket, left_col="is_new").localCheckpoint(
         eager=True
     )
-
-    # guard BEFORE the text join silently drops anything: every candidate
-    # endpoint must have text -- always true for a store_text store (texts
-    # commit with the same batch as the sigs that produced the candidate);
-    # with a caller-supplied corpus it fails loudly when an earlier batch
-    # was not passed, rather than keeping a true near-duplicate
     texts = new_corpus.select("id", "text").unionByName(
         old_texts.select("id", "text")
     )
-    cand_ids = pairs.select(F.col("id_a").alias("id")).unionByName(
-        pairs.select(F.col("id_b").alias("id"))
-    ).distinct()
-    missing = cand_ids.join(texts.select("id"), "id", "left_anti")
-    n_missing = missing.limit(1).count()
-    if n_missing:
-        sample = [r.id for r in missing.limit(5).collect()]
-        raise ValueError(
-            "candidate endpoints without text, e.g. "
-            f"{sample}. Build the store with store_text=True, or pass the "
-            "cumulative prior corpus (all earlier batches) as old_corpus."
-        )
+    _require_endpoint_payload(pairs, texts, "text", "store_text")
 
     # signature prefilter (JVM) + exact verify (operators/dedup.py shared
     # tail); old text enters only through the candidate-id join
@@ -303,22 +287,29 @@ def _new_minhash_edges(
     verified = sig_prefiltered_verify(
         pairs, sig_text, n_perm, threshold
     ).select("id_a", "id_b")
+    return verified, new_sigs
 
-    # map OLD endpoints to their cluster keeper (old decisions immutable)
-    old_map = read_decisions(spark, store).select(
-        F.col("id").alias("old_id"), F.col("keeper").alias("old_keeper")
-    )
-    e = (
-        verified.join(old_map.withColumnRenamed("old_id", "id_a"), "id_a", "left")
-        .withColumn("src", F.coalesce("old_keeper", "id_a"))
-        .drop("old_keeper")
-        .join(old_map.withColumnRenamed("old_id", "id_b"), "id_b", "left")
-        .withColumn("dst", F.coalesce("old_keeper", "id_b"))
-        .select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    return e, new_sigs
+
+def _require_endpoint_payload(
+    pairs: DataFrame, payload: DataFrame, noun: str, store_flag: str
+) -> None:
+    """Raise unless every candidate endpoint has a ``payload`` row (the
+    text or embedding its verify joins in). Checked BEFORE that join, which
+    would silently drop the pair and keep a true near-duplicate. Always
+    true for a store that keeps its payload (it commits with the same batch
+    as the rows that produced the candidate); with a caller-supplied corpus
+    it fails loudly when an earlier batch was not passed."""
+    cand_ids = pairs.select(F.col("id_a").alias("id")).unionByName(
+        pairs.select(F.col("id_b").alias("id"))
+    ).distinct()
+    missing = cand_ids.join(payload.select("id"), "id", "left_anti")
+    if missing.limit(1).count():
+        sample = [r.id for r in missing.limit(5).collect()]
+        raise ValueError(
+            f"candidate endpoints without {noun}, e.g. {sample}. Build the "
+            f"store with {store_flag}=True, or pass the cumulative prior "
+            "corpus (all earlier batches) as old_corpus."
+        )
 
 
 def write_embedding_store(
@@ -448,17 +439,7 @@ def add_embeddings(
     )
 
     embs = new.unionByName(old)
-    cand_ids = pairs.select(F.col("id_a").alias("id")).unionByName(
-        pairs.select(F.col("id_b").alias("id"))
-    ).distinct()
-    missing = cand_ids.join(embs.select("id"), "id", "left_anti")
-    if missing.limit(1).count():
-        sample = [r.id for r in missing.limit(5).collect()]
-        raise ValueError(
-            "candidate endpoints without embeddings, e.g. "
-            f"{sample}. Build the store with store_embeddings=True, or "
-            "pass the cumulative prior corpus as old_corpus."
-        )
+    _require_endpoint_payload(pairs, embs, "embeddings", "store_embeddings")
     verified = (
         pairs.join(embs.select(F.col("id").alias("id_a"),
                                F.col("emb").alias("emb_a")), "id_a")
@@ -467,20 +448,7 @@ def add_embeddings(
         .filter(cosine_expr(F.col("emb_a"), F.col("emb_b")) >= p["threshold"])
         .select("id_a", "id_b")
     )
-    old_map = read_decisions(spark, store).select(
-        F.col("id").alias("old_id"), F.col("keeper").alias("old_keeper")
-    )
-    edges = (
-        verified.join(old_map.withColumnRenamed("old_id", "id_a"), "id_a", "left")
-        .withColumn("src", F.coalesce("old_keeper", "id_a"))
-        .drop("old_keeper")
-        .join(old_map.withColumnRenamed("old_id", "id_b"), "id_b", "left")
-        .withColumn("dst", F.coalesce("old_keeper", "id_b"))
-        .select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    decisions_new = _first_seen_decisions(spark, store, new.select("id"), edges)
+    decisions_new = _first_seen_decisions(spark, store, new.select("id"), verified)
     bid = _new_batch_id()
     _publish(new_bd, store, "emb_buckets", bid)
     if p.get("store_embeddings"):
@@ -496,54 +464,47 @@ def _first_seen_decisions(
     spark: SparkSession,
     store: str,
     new_ids: DataFrame,
-    edges: DataFrame,
+    verified: DataFrame,
 ) -> DataFrame:
-    """First-seen-wins cluster assignment shared by every near-dup
-    strategy: CC over the verified edge graph (old endpoints arrive
-    pre-mapped to their keeper), then per component the min OLD keeper
-    wins if any member is one, else the component min; untouched new docs
-    keep themselves. Returns checkpointed (id, keeper, keep) for the new
-    batch only."""
+    """The first-seen-wins keeper rule (module docstring) over the verified
+    (id_a, id_b) pairs touching the new batch, with one read of the
+    decisions table. ``new_ids`` excludes every decided id, so after the
+    mapping the old ids in a component are keepers; the component label is
+    its min id. Returns checkpointed (id, keeper, keep) for the new batch
+    only."""
     from ..operators.canonicalize import connected_components
 
-    # eager: edges feed isEmpty AND both sides of the CC symmetrizing
-    # union -- without the barrier the whole candidate+verify pipeline
-    # (band joins + verify UDF) re-executes per consumer
-    edges = edges.localCheckpoint(eager=True)
-    if edges.isEmpty():
-        return new_ids.select(
-            "id", F.col("id").alias("keeper"), F.lit(True).alias("keep")
-        ).localCheckpoint(eager=True)
-    old_keepers = (
-        read_decisions(spark, store)
-        .filter("keep")
-        .select(F.col("id").alias("kid"))
-    )
-    comp = connected_components(edges)  # (id, component)
-    old_in_comp = (
-        comp.join(old_keepers, comp.id == old_keepers.kid)
+    edges = _keeper_edges(verified, read_decisions(spark, store))
+    comp = connected_components(edges)  # (id, component); no pair -> no row
+    old_keeper = (
+        comp.join(new_ids, "id", "left_anti")
         .groupBy("component")
-        .agg(F.min("kid").alias("old_keeper"))
+        .agg(F.min("id").alias("old_keeper"))
     )
-    comp_keeper = (
-        comp.groupBy("component")
-        .agg(F.min("id").alias("comp_min"))
-        .join(old_in_comp, "component", "left")
-        .select(
-            "component", F.coalesce("old_keeper", "comp_min").alias("ckeeper")
-        )
-    )
-    labeled = comp.join(comp_keeper, "component").select(
-        F.col("id"), F.col("ckeeper")
-    )
+    keeper = F.coalesce("old_keeper", "component", "id")
     return (
-        new_ids.join(labeled, "id", "left")
-        .select(
-            "id",
-            F.coalesce("ckeeper", F.col("id")).alias("keeper"),
-            (F.coalesce("ckeeper", F.col("id")) == F.col("id")).alias("keep"),
-        )
+        new_ids.join(comp, "id", "left")
+        .join(old_keeper, "component", "left")
+        .select("id", keeper.alias("keeper"), (keeper == F.col("id")).alias("keep"))
         .localCheckpoint(eager=True)
+    )
+
+
+def _keeper_edges(verified: DataFrame, decisions: DataFrame) -> DataFrame:
+    """(src, dst): the verified (id_a, id_b) pairs with every OLD endpoint
+    replaced by its cluster's keeper (old decisions are immutable)."""
+    def keepers(col: str) -> DataFrame:
+        return decisions.select(
+            F.col("id").alias(col), F.col("keeper").alias(f"{col}_keeper")
+        )
+
+    return (
+        verified.join(keepers("id_a"), "id_a", "left")
+        .join(keepers("id_b"), "id_b", "left")
+        .select(
+            F.coalesce("id_a_keeper", "id_a").alias("src"),
+            F.coalesce("id_b_keeper", "id_b").alias("dst"),
+        )
     )
 
 
@@ -597,9 +558,9 @@ def add_documents(
                     "pass the cumulative prior corpus as old_corpus for "
                     "selective candidate verification"
                 )
-        edges, new_sigs = _new_minhash_edges(spark, store, new_corpus, old_texts, p)
+        verified, new_sigs = _new_minhash_pairs(spark, store, new_corpus, old_texts, p)
         decisions_new = _first_seen_decisions(
-            spark, store, new_corpus.select("id"), edges
+            spark, store, new_corpus.select("id"), verified
         )
         _publish(new_sigs.select("id", "sig"), store, "sigs", bid)
         if p.get("store_text"):

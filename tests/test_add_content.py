@@ -135,16 +135,21 @@ def test_crash_window_vertex_recovery(spark):
         add_content(spark, out, second, checkpoint_dir=ck)
         expected_v = _vertex_set(spark, out)
         expected_e = _edge_set(spark, out)
+        edge_files = _file_digests(os.path.join(out, "edges"))
 
         # crash window: vertex table gone/partial, _SUCCESS missing ->
         # the ingest fallback re-runs materialize with ONLY the replayed
-        # batch against the same manifest checkpoint
+        # batch against the same manifest checkpoint. Every bucket is
+        # committed, so the edge write is skipped: the edge files stay
+        # byte-for-byte as they were
         shutil.rmtree(os.path.join(out, "vertices"))
-        materialize_graph(build_triples(spark, second), out,
-                          checkpoint_dir=ck, spark=spark)
+        stats = materialize_graph(build_triples(spark, second), out,
+                                  checkpoint_dir=ck, spark=spark)
 
+        assert stats["skipped_buckets"] == list(range(16))
         assert _vertex_set(spark, out) == expected_v
         assert _edge_set(spark, out) == expected_e
+        assert _file_digests(os.path.join(out, "edges")) == edge_files
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

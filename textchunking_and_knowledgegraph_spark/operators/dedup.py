@@ -633,7 +633,11 @@ def with_sign_buckets(
             out[:, t] = (signs * (1 << np.arange(n_planes))).sum(axis=1)
         return pd.Series(list(out))
 
-    bucketed = df.withColumn("_buckets", _buckets(F.col(emb_col)))
+    # Nondeterministic to the optimizer only (as _shingle_jaccard): the
+    # size(_buckets) > 0 filter inferred for posexplode would be pushed below
+    # this projection with the UDF inlined into it, and the UDF would run
+    # twice per row.
+    bucketed = df.withColumn("_buckets", _buckets.asNondeterministic()(F.col(emb_col)))
     return (
         bucketed.select(
             "*", F.posexplode("_buckets").alias("table_id", "bucket")

@@ -10,8 +10,11 @@ of rewriting the whole edge table, the plan
   2. anti-joins them against ONLY the affected buckets of the persisted
      table (MERGE semantics, J10 -- `StoreToNeo4j/Neo4j_functions.py:14-31`),
   3. rewrites those buckets with dynamic partition overwrite (Iceberg:
-     ``overwritePartitions`` on ``bucket(repo)``; parquet emulation here),
-  4. merges the vertex table the same way, per affected ``v_bucket``.
+     ``overwritePartitions`` on ``bucket(repo)``; parquet emulation here)
+     and recommits their manifests from the per-bucket row counts observed
+     on that write,
+  4. merges the vertex table the same way, per affected ``v_bucket``; the
+     manifests count edges only, so they are already committed by then.
 
 Unaffected buckets are never read or written -- an append of one repo to a
 10^12-file table costs O(new data + affected buckets), not O(table).
@@ -34,10 +37,10 @@ from pyspark.sql import functions as F
 from ..operators.graph import merge_vertices
 from .materialize import (
     EDGE_KEY,
-    commit_bucket_manifests,
     read_graph_meta,
     with_bucket,
     write_buckets,
+    write_edge_buckets,
 )
 from .pipeline import build_triples, build_vertices
 
@@ -89,8 +92,10 @@ def add_content(
         )
         incoming = new_edges.join(existing, EDGE_KEY, "left_anti")
         merged = existing.unionByName(incoming.select(*existing.columns))
-        write_buckets(merged, output_dir, "edges", len(affected),
-                      files_per_bucket, "dynamic")
+        # the manifests of the affected buckets are recommitted from the
+        # row counts observed on this write (lineage/metrics stay true)
+        write_edge_buckets(merged, affected, output_dir, checkpoint_dir,
+                           files_per_bucket, t0)
 
         # vertex MERGE (anti-join insert, existing vertices win), read and
         # rewritten only in the buckets the new batch's vertex names hash
@@ -109,15 +114,7 @@ def add_content(
         merged_v = with_bucket(
             merge_vertices(existing_v, new_v.drop("v_bucket")), "vertices", n_buckets
         )
-        write_buckets(merged_v, output_dir, "vertices", max(1, len(affected_v)),
-                      files_per_bucket, "dynamic")
-
-        # recommit manifests for affected buckets (lineage/metrics stay true)
-        if checkpoint_dir:
-            commit_bucket_manifests(
-                spark.read.parquet(edge_dir).filter(F.col("repo_bucket").isin(affected)),
-                affected, output_dir, checkpoint_dir, t0,
-            )
+        write_buckets(merged_v, output_dir, "vertices", files_per_bucket, "dynamic")
         return {"new_edges": incoming.count(), "affected_buckets": affected}
     finally:
         new_edges.unpersist()

@@ -15,17 +15,22 @@ the same helpers:
   ``files_per_bucket`` (``read_graph_meta``). A graph without it, or with a
   flat vertex table, is refused by ``add_content``: rebuild it here.
 - **checkpoint-based resume**: every pending bucket is written by ONE Spark
-  write; once it succeeds, a manifest JSON per bucket records (rows, docs,
-  sha_count, t_ms) -- all committed together, sharing the write's t_ms.
+  write; once it succeeds, a manifest JSON per bucket records (bucket,
+  rows, t_ms) -- all committed together, sharing the write's t_ms.
   A run killed during the edge write commits no manifest, so its re-run
   rewrites every pending bucket; a run killed later (vertex write) is
-  re-run with every bucket skipped and only the vertices rebuilt. Bucket
-  contents are deterministic, so the final output is identical to an
-  uninterrupted run.
+  re-run with every bucket committed, so it skips the edge write -- and
+  the extraction upstream of it -- and only rebuilds the vertices from
+  the persisted edges. Bucket contents are deterministic, so the final
+  output is identical to an uninterrupted run.
 - **MERGE semantics** (J10): dropDuplicates on the canonical key before
   write -- the distributed equivalent of Cypher MERGE's anti-join insert.
-- **lineage**: edges carry (repo, path, commit, sha); the manifest stores
-  per-partition row counts + distinct sha counts as the metrics side-channel.
+- **lineage**: edges carry (repo, path, commit, sha).
+- **counts from the writes**: the per-bucket manifest rows and the vertex
+  total are ``Observation`` metrics of the writes themselves (Delta Lake
+  and Iceberg take table statistics the same way): no pass over the data
+  exists only to count it -- no edge cache, no stats aggregation, no
+  re-count of the written vertices.
 """
 
 from __future__ import annotations
@@ -35,7 +40,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 EDGE_KEY = ["subj", "pred", "obj", "sha"]
@@ -98,76 +103,100 @@ def write_buckets(
     df: DataFrame,
     output_dir: str,
     table: str,
-    n_write_buckets: int,
     files_per_bucket: int,
     overwrite: str,
-) -> None:
+    metrics: list[Column] | None = None,
+) -> dict:
     """Write ``df`` (carrying ``table``'s bucket column) under
-    ``output_dir/table``, partitioned by bucket. ``overwrite`` is the
-    partitionOverwriteMode, always set here so a session default cannot
-    change what is replaced: ``"static"`` replaces the whole table,
-    ``"dynamic"`` only the buckets present in ``df``.
+    ``output_dir/table``, partitioned by bucket, and return ``metrics``
+    (named aggregate expressions) observed on the rows as they are written:
+    table statistics taken by the write itself, not by a second scan.
+    ``overwrite`` is the partitionOverwriteMode, always set here so a
+    session default cannot change what is replaced: ``"static"`` replaces
+    the whole table, ``"dynamic"`` only the buckets present in ``df``.
 
-    Partitioning key = (bucket, salt): repartitioning on the bucket ALONE
-    would make each bucket a single task/file -- a multi-TB task at 100 TB
-    scale. The salt gives files_per_bucket parallel writers per bucket
-    directory (size it so files land ~512 MB at the target scale);
-    sortWithinPartitions keeps a deterministic key-ordered layout for
-    point-join locality (SURVEY.md 4.3). On a real cluster this is Iceberg
-    overwritePartitions on bucket(key)."""
+    The rows are distributed by a ``rebalance`` hint on (bucket, salt), so
+    AQE sizes the write tasks, and with them the files, from the shuffled
+    bytes: small partitions are coalesced, skewed ones split towards the
+    advisory partition size. A fixed ``n_buckets * files_per_bucket``
+    task count would write tens of tiny files for a small graph. The salt
+    keeps a bucket from hashing to ONE shuffle partition, which at 100 TB
+    scale would be a multi-TB task: it spreads each bucket over up to
+    files_per_bucket partitions. sortWithinPartitions keeps a deterministic
+    key-ordered layout for point-join locality (SURVEY.md 4.3). On a real
+    cluster this is Iceberg overwritePartitions on bucket(key)."""
     col, _, salt_cols, sort_col = _LAYOUT[table]
-    salt = F.pmod(F.xxhash64(*salt_cols), F.lit(files_per_bucket))
+    if metrics:
+        obs = Observation()
+        df = df.observe(obs, *metrics)
     (
-        df.repartition(n_write_buckets * files_per_bucket, F.col(col), salt)
+        df.withColumn("_salt", F.pmod(F.xxhash64(*salt_cols), F.lit(files_per_bucket)))
+        .hint("rebalance", col, "_salt")
+        .drop("_salt")
         .sortWithinPartitions(col, sort_col)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", overwrite)
         .partitionBy(col)
         .parquet(os.path.join(output_dir, table))
     )
+    return _observed(obs) if metrics else {}
+
+
+def _observed(obs: Observation) -> dict:
+    """``obs.get``, or ``{}`` when no task reported the metrics. Spark
+    completes an observation whose plan ran no task (an input the optimizer
+    proved empty, or one with no partitions) with an empty row, which
+    ``Observation.get`` cannot convert; no task means no rows, so every
+    count is 0."""
+    return obs.get if obs._jo.getRow().length() else {}
 
 
 def commit_bucket_manifests(
-    edges: DataFrame,
-    buckets: list[int],
+    rows: dict[int, int],
     output_dir: str,
     checkpoint_dir: str | None,
     t0: float,
 ) -> int:
-    """Commit ``bucket_<b>.json`` (rows, sha_count, docs, t_ms) for every
-    bucket in ``buckets`` from ONE grouped aggregation over ``edges`` (n
-    buckets rows collected -- manifest stats, not hot path); t_ms is the
-    time since ``t0``, shared by all. Returns the buckets' total rows.
+    """Commit ``bucket_<b>.json`` (bucket, rows, t_ms) for every bucket of
+    ``rows`` ({bucket: rows written}); t_ms is the time since ``t0``,
+    shared by all. Returns the buckets' total rows.
 
     A dynamic overwrite only replaces the buckets present in the write, so
     a bucket that has no rows now but held data from an earlier run into
     the same ``output_dir`` would keep its stale files: its directory is
     removed BEFORE its manifest commits (a resumed run skips committed
     buckets)."""
-    stats = {
-        int(r["repo_bucket"]): r
-        for r in edges.groupBy("repo_bucket")
-        .agg(
-            F.count("*").alias("rows"),
-            F.countDistinct("sha").alias("sha_count"),
-            F.countDistinct("path").alias("docs"),
-        )
-        .collect()
-    }
     t_ms = int((time.time() - t0) * 1000)
-    total = 0
-    for b in buckets:
-        r = stats.get(b)
-        if r is None:
+    for b, n in sorted(rows.items()):
+        if n == 0:
             shutil.rmtree(
                 os.path.join(output_dir, "edges", f"repo_bucket={b}"),
                 ignore_errors=True,
             )
-        counts = {k: int(r[k]) if r else 0 for k in ("rows", "sha_count", "docs")}
-        total += counts["rows"]
         if checkpoint_dir:
-            _commit(checkpoint_dir, f"bucket_{b}", {"bucket": b, **counts, "t_ms": t_ms})
-    return total
+            _commit(checkpoint_dir, f"bucket_{b}", {"bucket": b, "rows": n, "t_ms": t_ms})
+    return sum(rows.values())
+
+
+def write_edge_buckets(
+    edges: DataFrame,
+    buckets: list[int],
+    output_dir: str,
+    checkpoint_dir: str | None,
+    files_per_bucket: int,
+    t0: float,
+) -> int:
+    """ONE dynamic-overwrite write of ``edges``, every row of which hashes
+    into ``buckets``, then the manifests of ``buckets`` from the per-bucket
+    row counts observed on that write (one ``count_if`` per bucket).
+    Returns the rows written."""
+    counts = write_buckets(
+        edges, output_dir, "edges", files_per_bucket, "dynamic",
+        [F.count_if(F.col("repo_bucket") == b).alias(f"b{b}") for b in buckets],
+    )
+    return commit_bucket_manifests(
+        {b: int(counts.get(f"b{b}", 0)) for b in buckets}, output_dir, checkpoint_dir, t0
+    )
 
 
 def materialize_graph(
@@ -190,50 +219,51 @@ def materialize_graph(
     _commit(output_dir, _GRAPH_META,
             {"n_buckets": n_buckets, "files_per_bucket": files_per_bucket})
 
-    edges = with_bucket(triples.dropDuplicates(EDGE_KEY), "edges", n_buckets).persist()
-    try:
-        done = committed_buckets(checkpoint_dir)
-        skipped = sorted(done)
-        total_rows = sum(
-            json.load(open(_manifest_path(checkpoint_dir, f"bucket_{b}")))["rows"]
-            for b in skipped
-        )
+    edges = with_bucket(triples.dropDuplicates(EDGE_KEY), "edges", n_buckets)
+    skipped = sorted(committed_buckets(checkpoint_dir))
+    total_rows = 0
+    for b in skipped:
+        with open(_manifest_path(checkpoint_dir, f"bucket_{b}")) as f:
+            total_rows += json.load(f)["rows"]
+    pending = [b for b in range(n_buckets) if b not in skipped]
+    # With every bucket committed (the vertex-only recovery after a crash
+    # during the vertex write) the edge plan, extraction included, never
+    # runs: a write of zero pending buckets would redo all of it to write
+    # nothing.
+    if pending:
         t0 = time.time()
-
-        pending = edges
-        if done:
+        if skipped:
             # resume: committed buckets are filtered out BEFORE the write --
             # dynamic partition overwrite touches only pending directories
-            pending = edges.filter(~F.col("repo_bucket").isin(skipped))
-
+            edges = edges.filter(~F.col("repo_bucket").isin(skipped))
         # ONE write for every pending bucket: O(1) Spark jobs regardless of
         # n_buckets
-        write_buckets(pending, output_dir, "edges", n_buckets, files_per_bucket,
-                      "dynamic")
-        total_rows += commit_bucket_manifests(
-            pending, [b for b in range(n_buckets) if b not in done],
-            output_dir, checkpoint_dir, t0,
-        )
+        total_rows += write_edge_buckets(edges, pending, output_dir, checkpoint_dir,
+                                         files_per_bucket, t0)
 
-        from .pipeline import build_vertices
+    from .pipeline import build_vertices
 
-        # Vertices are derived from the PERSISTED edge table, not from this
-        # run's triples: on a recovery re-run (e.g. the streaming-ingest
-        # fallback replaying one batch after a crash mid-vertex-write) the
-        # triples argument holds ONLY the replayed batch, and building
-        # vertices from it would silently drop every earlier batch's
-        # vertices while edges stay complete. The persisted table is always
-        # the union of all committed buckets, and the scan is column-pruned
-        # to the endpoint/type columns.
-        ss = spark or triples.sparkSession
-        persisted = ss.read.parquet(os.path.join(output_dir, "edges")).drop("repo_bucket")
-        # name-hash bucketed (same n_buckets as edges) so add_content merges
-        # vertices per affected bucket; static: the whole table is replaced
-        write_buckets(with_bucket(build_vertices(persisted), "vertices", n_buckets),
-                      output_dir, "vertices", n_buckets, files_per_bucket, "static")
-        n_vertices = ss.read.parquet(os.path.join(output_dir, "vertices")).count()
-        if checkpoint_dir:
-            _commit(checkpoint_dir, "vertices", {"rows": n_vertices})
-        return {"edges": total_rows, "vertices": n_vertices, "skipped_buckets": skipped}
-    finally:
-        edges.unpersist()
+    # Vertices are derived from the PERSISTED edge table, not from this
+    # run's triples: on a recovery re-run (e.g. the streaming-ingest
+    # fallback replaying one batch after a crash mid-vertex-write) the
+    # triples argument holds ONLY the replayed batch, and building vertices
+    # from it would silently drop every earlier batch's vertices while
+    # edges stay complete. The persisted table is always the union of all
+    # committed buckets; the scan is column-pruned to the endpoint/type
+    # columns, and reading it with the known schema skips schema inference.
+    ss = spark or triples.sparkSession
+    persisted = (
+        ss.read.schema(edges.schema)
+        .parquet(os.path.join(output_dir, "edges"))
+        .drop("repo_bucket")
+    )
+    # name-hash bucketed (same n_buckets as edges) so add_content merges
+    # vertices per affected bucket; static: the whole table is replaced
+    n_vertices = write_buckets(
+        with_bucket(build_vertices(persisted), "vertices", n_buckets),
+        output_dir, "vertices", files_per_bucket, "static",
+        [F.count(F.lit(1)).alias("rows")],
+    ).get("rows", 0)
+    if checkpoint_dir:
+        _commit(checkpoint_dir, "vertices", {"rows": n_vertices})
+    return {"edges": total_rows, "vertices": n_vertices, "skipped_buckets": skipped}

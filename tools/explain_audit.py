@@ -73,8 +73,9 @@ CHECKS = [
 # BatchEvalPython) a plan must hold: kg_triples is one fused extraction
 # pass; dedup_minhash runs only the verify UDF (its signatures are
 # checkpointed before the pair plan is built), so a second stage means the
-# verify runs twice
-PYTHON_STAGES = {"kg_triples": 1, "dedup_minhash": 1}
+# verify runs twice; ann_srp_topk runs the sign-bucket UDF once on each
+# side (corpus and queries), so a third stage means one side runs it twice
+PYTHON_STAGES = {"kg_triples": 1, "dedup_minhash": 1, "ann_srp_topk": 2}
 
 
 def plan_of(df) -> str:
